@@ -5,15 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.graph.{GraphTables, Materialize, PatternMatch}
-import graft.model.RawTriple
-import graft.operators.canon.{Canonicalize, ConnectedComponents}
+import graft.graph.{GraphTables, PatternMatch}
+import graft.operators.canon.ConnectedComponents
 import graft.operators.dedup.Dedup
 import graft.operators.extract.Extract
-import graft.operators.link.EntityLinker
 import graft.operators.multimodal.Multimodal
 import graft.operators.similarity.SimilaritySearch
 import graft.operators.text.TextAnalysis
+import graft.plans.Pipeline
 import graft.sources.TpchKg
 
 /** Driver contract: one query per implemented operator (SURVEY.md §2 +
@@ -36,25 +35,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     kgEdges(spark, "/root/testdata/sf0.001")
 
-  private def kgLinked(s: SparkSession, dir: String) = {
-    import s.implicits._
-    EntityLinker.link(
-      Extract.triples(TpchKg.turns(s, dir)), TpchKg.dict(s, dir), useLsh = false)
-  }
-
-  /** Materialized graph, memoized per (session, sf dir) with canon and the
-    * node/edge tables persisted: the driver runs kg_nodes / kg_edges /
-    * kg_match_* as separate queries, and within kg_edges the node table is
-    * joined twice — without the cache the whole extract→link→CC pipeline
-    * would recompute per reference (it did in round 1: 162 s for kg_edges at
-    * sf0.1). This mirrors serving from Pipeline stage snapshots.
-    */
-  /** Cached per (session, sf dir): the materialized graph AND the pattern
-    * layer's name-distinct edge view. The distinct view is persisted next to
-    * nodes/edges because every kg_match_* / kg_cypher* query starts from it —
-    * recomputing `edges.select(...).distinct()` per query repeated a full
-    * edge-table shuffle five times per session (round-3 judge finding; at
-    * 100× each repeat is a full edge-table shuffle).
+  /** Cached per (session, sf dir): the materialized graph, the linked stage
+    * it was built from, and the pattern layer's name-distinct edge view.
+    * A sweep runs kg_linked / kg_nodes / kg_edges / kg_match_* as
+    * separate queries, and within kg_edges the node table is joined twice —
+    * without the cache the whole extract→link→CC pipeline would recompute
+    * per reference (it did in round 1: 162 s for kg_edges at sf0.1). This
+    * mirrors serving from Pipeline stage snapshots. The distinct view is
+    * kept next to nodes/edges because every kg_match_* / kg_cypher* query
+    * starts from it — recomputing `edges.select(...).distinct()` per query
+    * repeated a full edge-table shuffle five times per session.
     */
   private final case class CachedGraph(g: GraphTables, patternEdges: DataFrame,
       linked: DataFrame)
@@ -68,73 +58,23 @@ object SparkEntry {
     // cache doesn't retain dead sessions and their persisted plans forever
     graphCache.keySet.removeIf(_._1.sparkContext.isStopped)
     graphCache.computeIfAbsent((s, dir), { _ =>
-      // Materialize with LINEAGE CUT (eager localCheckpoint, same
-      // MEMORY_AND_DISK residency as a persist), not bare persist: a
-      // persisted DataFrame's analyzed plan still carries the WHOLE
-      // extract→link→CC→materialize DAG below it, and every one of the ~20
-      // kg_match_*/kg_cypher* queries that builds on nodes/patternEdges
-      // re-pays driver-side plan work (canonicalization for the cache
-      // lookup, per-execution plan rendering) proportional to that tree —
-      // measured ~2.0 s of the ~2.6 s warm per-query cost at sf0.1
-      // (ProfileWarm: identical 2-expand+distinct plan 2.6 s over persists
-      // vs 0.5 s over checkpointed leaves). The checkpoint gives each
-      // serving query a shallow LogicalRDD scan — the same serving-from-
-      // snapshot shape Pipeline's final mode uses at stage boundaries.
-      // linked is checkpointed first: canon consumes it in two subtrees
-      // (sides vocabulary + the rewrite joins), which otherwise re-ran the
-      // whole extract+link chain per consumer.
-      val linked = kgLinked(s, dir).toDF().localCheckpoint(true)
-      import s.implicits._
-      val canon = Canonicalize(linked.as[graft.model.LinkedTriple],
-        TpchKg.dict(s, dir)).toDF().localCheckpoint(true)
-      val types = TpchKg.dict(s, dir)
-        .select(col("canonical_name").as("canon_name"), col("entity_type")).distinct()
-      val g = Materialize.graph(canon.as[graft.model.CanonTriple], Some(types))
-      // nodes and the edges→patternEdges chain are INDEPENDENT consumers of
-      // the canon checkpoint: materialize them concurrently (ordinary
-      // multi-threaded job submission — guide §2.6 overlap-independent-jobs;
-      // the same shape Pipeline's S5a ∥ S5b uses) so one chain's straggler
-      // tail backfills with the other's tasks instead of idling the session.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fEdges = Future {
-        val edges = g.edges.localCheckpoint(true)
-        // the name-distinct view needs its own edge id (provenance ids
-        // collapsed with the multiplicity): rows are unique on
-        // (src, dst, rel_type), so a content hash of exactly that is one —
-        // expandVarLength keys relationship uniqueness on it
-        val patternEdges = edges.select(col("src"), col("dst"), col("rel_type"))
+      // Pipeline's stage DAG with every stage kept in memory (lineage cut),
+      // so each serving query plans over shallow scans
+      val (linked, g) = Pipeline.graphStages(Extract.triples(TpchKg.turns(s, dir)),
+        TpchKg.dict(s, dir), useLsh = false, Pipeline.InMemory, serving = true)
+      // the name-distinct view needs its own edge id (provenance ids
+      // collapsed with the multiplicity): rows are unique on
+      // (src, dst, rel_type), so a content hash of exactly that is one —
+      // expandVarLength keys relationship uniqueness on it
+      val patternEdges = Pipeline.InMemory("patternEdges") {
+        g.edges.select(col("src"), col("dst"), col("rel_type"))
           .distinct()
           .select(GraftFunctions.fnv64(concat_ws(":", col("src"), col("dst"),
             col("rel_type"))).as("id"), col("src"), col("dst"), col("rel_type"))
-          .localCheckpoint(true)
-        (edges, patternEdges)
       }
-      val fNodes = Future(g.nodes.localCheckpoint(true))
-      // settle BOTH before surfacing either failure (a half-built cache entry
-      // must not be memoized)
-      val rEdges = Await.ready(fEdges, Duration.Inf).value.get
-      val rNodes = Await.ready(fNodes, Duration.Inf).value.get
-      val (edges, patternEdges) = rEdges.get
-      val nodes = rNodes.get
-      // canon fed only the materialization; its blocks are dead weight once
-      // nodes+edges are checkpointed. linked STAYS resident: kg_linked
-      // serves from it (the same stage-snapshot serving kg_nodes/kg_edges
-      // get — it is the linking stage's committed output for this session).
-      releaseCheckpoint(canon)
-      CachedGraph(GraphTables(nodes, edges), patternEdges, linked)
+      CachedGraph(g, patternEdges, linked)
     })
   }
-
-  /** Free a checkpointed intermediate's blocks (localCheckpoint persists at
-    * the RDD layer — DataFrame.unpersist can't reach it).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   private def kgGraph(s: SparkSession, dir: String): GraphTables = kgCached(s, dir).g
 

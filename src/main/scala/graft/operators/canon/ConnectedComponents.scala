@@ -28,8 +28,11 @@ object ConnectedComponents {
   /** @param edges DataFrame with long columns (src, dst), undirected.
     * @return DataFrame (id: Long, component: Long); component = min id in the
     *         node's component. Every id occurring in edges appears exactly once.
+    * @throws IllegalStateException if the rounds have not converged after
+    *         `maxIter` rounds.
     */
   def run(edges: DataFrame, maxIter: Int = 40): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be at least 1, got $maxIter")
     val spark = edges.sparkSession
     var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst"))
@@ -99,6 +102,11 @@ object ConnectedComponents {
       if (sys.env.contains("GRAFT_CC_VERBOSE"))
         System.err.println(s"[cc] round $iter edges=${sig._1} converged=$converged")
     }
+    // an unconverged edge set is not a star set: emitting it would silently
+    // split components that the remaining rounds would have merged
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge in $iter rounds: ${prevSig._1} edges " +
+        s"remain; raise maxIter")
     // At the fixpoint every edge points from a node to its component min.
     val stars = e.select(col("src").as("id"), col("dst").as("component"))
     val roots = e.select(col("dst").as("id")).distinct()

@@ -1,16 +1,23 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.graph.Materialize
+import graft.graph.{GraphTables, Materialize}
 import graft.io.TableIO
-import graft.model.{LinkedTriple, RawTriple, Turn}
+import graft.model.{CanonTriple, LinkedTriple, RawTriple, Turn}
 import graft.operators.canon.Canonicalize
 import graft.operators.extract.{Extract, MentionDetector}
 import graft.operators.link.EntityLinker
 import graft.sources.TranscriptGen
+import graft.util.{Sessions, TempCaches}
 
 /** The end-to-end KG-construction pipeline (SURVEY.md §7.2):
   *
@@ -44,7 +51,7 @@ object Pipeline {
         */
       inputOrdered: Boolean = false,
       /** "all": snapshot every stage (resumable, production default);
-        * "final": persist intermediates in memory/disk cache and snapshot
+        * "final": keep intermediates as in-memory checkpoints and snapshot
         * only nodes/edges — the throughput-bench mode (a real cluster
         * checkpoints to scalable storage; a single local disk would
         * otherwise serialize the scaling measurement).
@@ -59,10 +66,6 @@ object Pipeline {
 
   private def stageDir(cfg: Config, s: String) = s"${cfg.workDir}/$s"
 
-  /** Run (or resume) the pipeline. Each stage reads its upstream from the
-    * committed snapshot — not from the in-memory plan — which is what makes
-    * resume exact and keeps per-stage plans short.
-    */
   /** Fail-fast guard: a workDir belongs to exactly one config. Resuming with
     * different generator/linking settings would silently serve the old run's
     * tables as if they were the new config's output.
@@ -87,8 +90,11 @@ object Pipeline {
   private val StageOrder = Seq("transcripts", "mentions", "triples", "linked",
     "canon", "nodes", "edges").zipWithIndex.toMap
 
-  /** Free a final-mode stage's checkpoint blocks once every consumer has
-    * materialized. localCheckpoint persists at the RDD layer (not the SQL
+  /** The graph tables: committed as snapshots in every checkpoint mode. */
+  private val GraphStages = Set("nodes", "edges")
+
+  /** Free a kept stage's checkpoint blocks once every consumer has been
+    * kept. localCheckpoint persists at the RDD layer (not the SQL
     * CacheManager), so `df.unpersist` can't reach it — the persisted RDD
     * lives inside the plan's LogicalRDD leaf. Without these releases every
     * stage's blocks stay resident until session teardown, and the peak
@@ -96,15 +102,124 @@ object Pipeline {
     * 26M turns that pushed a 48g heap into GC collapse (the 32-core config
     * burned 8× the 8-core config's CPU on the same stages). A cluster job
     * has the same obligation — upstream cache blocks are released as the
-    * dataflow passes them, whatever the executor count. Snapshot-mode
+    * dataflow passes them, whatever the executor count. Snapshot-kept
     * stages read back from parquet (no LogicalRDD leaf) — no-op there.
     */
-  private def releaseStage(dfs: DataFrame*): Unit =
+  private def releaseStage(dfs: Dataset[_]*): Unit =
     dfs.foreach(_.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     })
 
+  /** How [[graphStages]] keeps each stage's output: `keep(name,
+    * partitionBy)(compute)` computes the stage and returns the kept table.
+    */
+  private[graft] trait Keep {
+    def apply(name: String, partitionBy: Seq[String] = Nil)(compute: => DataFrame): DataFrame
+  }
+
+  /** Keep a stage as an eager in-memory checkpoint: materialize it AND cut
+    * lineage, so downstream stages and serving queries plan over a shallow
+    * LogicalRDD scan — the shape a snapshot read gives for free. Without the
+    * cut every downstream action re-canonicalizes and re-renders the whole
+    * upstream DAG: with the LSH expression trees that was MINUTES of
+    * driver-side plan-string building per AQE update (nondeterministic
+    * 200-300 s stage stalls in the scaling bench), and for the memoized
+    * graph ~2.0 s of a 2.6 s warm kg_match query at sf0.1 (the same
+    * 2-expand+distinct plan over checkpointed leaves ran in 0.5 s).
+    * Deserialized, not MEMORY_AND_DISK_SER: a serialized checkpoint makes
+    * every downstream scan re-pay per-row deserialization, and canon reads
+    * linked 2-3× (canon 31.4 s at 2 cores serialized vs ~12 s deserialized);
+    * the rows are already compact UnsafeRows, and [[releaseStage]] caps
+    * residency at ~2 live stages.
+    */
+  private[graft] object InMemory extends Keep {
+    def apply(name: String, partitionBy: Seq[String])(compute: => DataFrame): DataFrame =
+      compute.localCheckpoint(true)
+  }
+
+  /** Run two INDEPENDENT stages concurrently: Spark's scheduler interleaves
+    * the two jobs' tasks, so one stage's straggler tail overlaps the
+    * other's work instead of idling the cluster — a pure utilization win
+    * at high parallelism (at low parallelism the scheduler simply
+    * serializes the ready tasks, so it costs nothing there). This is
+    * ordinary multi-threaded job submission on one SparkSession — the
+    * supported Spark concurrency model — not a custom scheduler.
+    *
+    * Both sides settle before either failure surfaces: unwinding while the
+    * other side is mid-write would leave it detached, still writing against
+    * a run that is tearing down. On failure the side that succeeded has its
+    * checkpoint released before the failure is rethrown — nothing else
+    * holds a reference to it, so its blocks would otherwise stay pinned
+    * until session teardown.
+    */
+  private[graft] def concurrently(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {
+    val fa = Future(a)
+    val fb = Future(b)
+    val ra = Await.ready(fa, Duration.Inf).value.get
+    val rb = Await.ready(fb, Duration.Inf).value.get
+    (ra, rb) match {
+      case (Success(x), Success(y)) => (x, y)
+      case _ =>
+        Seq(ra, rb).foreach(_.foreach(releaseStage(_)))
+        throw Seq(ra, rb).collectFirst { case Failure(e) => e }.get
+    }
+  }
+
+  /** The KG stage DAG after extraction:
+    *
+    * {{{
+    * triples ─► S3 linked ─► S4 canon ─► S5 nodes ∥ edges
+    * }}}
+    *
+    * `keep` decides how each stage is kept: [[run]] commits TableIO
+    * snapshots (with `checkpoint = "final"`, in-memory checkpoints for
+    * linked and canon); SparkEntry's memoized graph keeps every stage
+    * [[InMemory]]. A kept checkpoint is released as soon as its consumers
+    * are kept: triples once linked is, linked once canon is, canon once
+    * nodes and edges are.
+    *
+    * @param serving the graph is built to serve queries: linked stays kept
+    *        (kg_linked reads it), and the operators' TempCaches tables are
+    *        left to the caller, because the build runs inside a query and
+    *        TempCaches may only be released between queries. A pipeline run
+    *        releases them once canon is kept, before S5's corpus-wide jobs
+    *        need the memory.
+    * @return linked (still kept only when `serving`) and the graph tables
+    */
+  private[graft] def graphStages(triples: Dataset[RawTriple], dict: DataFrame, useLsh: Boolean,
+      keep: Keep, serving: Boolean): (DataFrame, GraphTables) = {
+    val spark = triples.sparkSession
+    import spark.implicits._
+    // S3 — entity linking (broadcast joins only on the big side).
+    val linked = keep("linked") { EntityLinker.link(triples, dict, useLsh).toDF() }
+    releaseStage(triples)
+    // S4 — connected-components canonicalization. Canon consumes linked in
+    // two subtrees (the sides vocabulary and the rewrite joins), which is
+    // why linked is kept rather than left lazy.
+    val canon = keep("canon") { Canonicalize(linked.as[LinkedTriple], dict).toDF() }
+    if (!serving) {
+      releaseStage(linked)
+      // Canonicalize tracks its vocabulary-sized intermediates (sides, cmap,
+      // CC contract map) in TempCaches; the kept canon is their last consumer
+      TempCaches.release(spark)
+    }
+    // S5 — graph materialization; edges partitioned by rel_type (the Spark
+    // analog of the reference's typeRelMap scan index).
+    val types = dict.select(col("canonical_name").as("canon_name"), col("entity_type")).distinct()
+    lazy val graph = Materialize.graph(canon.as[CanonTriple], Some(types))
+    // S5a ∥ S5b — node and edge tables both derive from canon only
+    val (nodes, edges) = concurrently(
+      keep("nodes") { graph.nodes },
+      keep("edges", Seq("rel_type")) { graph.edges })
+    releaseStage(canon)
+    (linked, GraphTables(nodes, edges))
+  }
+
+  /** Run (or resume) the pipeline. Each stage reads its upstream from the
+    * committed snapshot — not from the in-memory plan — which is what makes
+    * resume exact and keeps per-stage plans short.
+    */
   def run(spark: SparkSession, cfg: Config): Result = {
     import spark.implicits._
     GraftFunctions.register(spark)
@@ -114,84 +229,31 @@ object Pipeline {
     val dict = TranscriptGen.aliasDictDs(spark, cfg.gen)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stages = Seq.newBuilder[StageRun]
+    def record(name: String, rows: Long, t0: Long): Unit = stages.synchronized {
+      stages += StageRun(name, rows, (System.nanoTime() - t0) / 1000000, resumed = false)
+    }
 
-    val snapshotAll = cfg.checkpoint != "final"
-
-    def stage(name: String, partitionBy: Seq[String] = Nil, always: Boolean = false)
-        (compute: => DataFrame): DataFrame = {
-      val dir = stageDir(cfg, name)
-      if (snapshotAll || always) {
-        if (TableIO.isComplete(dir)) {
-          val df = TableIO.read(spark, dir)
+    // the graph tables are always committed; "final" keeps the stages
+    // before them in memory
+    object keep extends Keep {
+      def apply(name: String, partitionBy: Seq[String])(compute: => DataFrame): DataFrame = {
+        val dir = stageDir(cfg, name)
+        val t0 = System.nanoTime()
+        if (cfg.checkpoint == "final" && !GraphStages(name)) {
+          val df = InMemory(name)(compute)
+          record(name, df.count(), t0)
+          df
+        } else if (TableIO.isComplete(dir)) {
           // row count comes from the committed manifest — resumed runs keep
           // real counts in metrics instead of clobbering them with -1
           stages.synchronized {
             stages += StageRun(name, TableIO.currentRowCount(dir).getOrElse(-1L), 0L, resumed = true)
           }
-          df
+          TableIO.read(spark, dir)
         } else {
-          val t0 = System.nanoTime()
-          val snap = TableIO.write(compute, dir, name, partitionBy)
-          stages.synchronized {
-            stages += StageRun(name, snap.rows, (System.nanoTime() - t0) / 1000000, resumed = false)
-          }
+          record(name, TableIO.write(compute, dir, name, partitionBy).rows, t0)
           TableIO.read(spark, dir)
         }
-      } else {
-        val t0 = System.nanoTime()
-        // materialize AND cut lineage (localCheckpoint ⇒ the downstream
-        // stage sees a shallow LogicalRDD scan, mirroring what the snapshot
-        // path gives for free). Without the cut, every downstream action
-        // re-canonicalizes and re-renders the whole upstream DAG — with the
-        // LSH expression trees that was MINUTES of driver-side plan-string
-        // building per AQE update (observed as nondeterministic 200-300 s
-        // stage stalls in the scaling bench). GRAFT_FINAL_MODE switches the
-        // materialization strategy for A/B measurement. Default is the
-        // DESERIALIZED checkpoint: MEMORY_AND_DISK_SER made every downstream
-        // scan re-pay per-row deserialization — canon reads linked 2-3×, so
-        // at 2 cores the SER tax dominated the stage (bench r5 profile:
-        // canon 31.4 s @2 SER vs ~12 s deserialized). Rows already stored as
-        // compact UnsafeRows; releaseStage() caps residency at ~2 live
-        // stages, which is what made SER's heap headroom unnecessary.
-        val df = sys.env.getOrElse("GRAFT_FINAL_MODE", "ckpt") match {
-          case "persist" =>
-            val d = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            d.count()
-            d
-          case "ckpt" => compute.localCheckpoint(true)
-          case _ => compute.localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        }
-        val rows = df.count()
-        stages.synchronized {
-          stages += StageRun(name, rows, (System.nanoTime() - t0) / 1000000, resumed = false)
-        }
-        df
-      }
-    }
-
-    /** Run two INDEPENDENT stages concurrently: Spark's scheduler interleaves
-      * the two jobs' tasks, so one stage's straggler tail overlaps the
-      * other's work instead of idling the cluster — a pure utilization win
-      * at high parallelism (at low parallelism the scheduler simply
-      * serializes the ready tasks; A/B'd in StageBench). This is ordinary
-      * multi-threaded job submission on one SparkSession — the supported
-      * Spark concurrency model — not a custom scheduler.
-      */
-    def concurrently(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {
-      if (sys.env.contains("GRAFT_NO_CONCURRENT_STAGES")) (a, b) // A/B escape
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fa = Future(a)
-        val fb = Future(b)
-        // settle BOTH before surfacing either failure: if a fails while b is
-        // mid-write, unwinding immediately would leave b detached, still
-        // writing its checkpoint table against a run that is tearing down
-        val ra = Await.ready(fa, Duration.Inf).value.get
-        val rb = Await.ready(fb, Duration.Inf).value.get
-        (ra.get, rb.get)
       }
     }
 
@@ -215,12 +277,9 @@ object Pipeline {
       case Some(p) if cfg.inputOrdered =>
         val t0 = System.nanoTime()
         val df = spark.read.parquet(p)
-        val rows = df.count()
-        stages.synchronized {
-          stages += StageRun("transcripts", rows, (System.nanoTime() - t0) / 1000000, resumed = false)
-        }
+        record("transcripts", df.count(), t0)
         df
-      case _ => stage("transcripts") {
+      case _ => keep("transcripts") {
         cfg.transcriptsPath match {
           case Some(p) => spark.read.parquet(p)
             .repartitionByRange(col("conv_id"))
@@ -247,37 +306,12 @@ object Pipeline {
       else MentionDetector.writeIndexFile(TranscriptGen.gazetteerDs(spark, cfg.gen), gazPath)
     }
     val (mentionsDf, triplesDf) = concurrently(
-      stage("mentions") { Extract.mentions(turns, gazetteer).toDF() },
-      stage("triples") { Extract.triples(turns).toDF() })
+      keep("mentions") { Extract.mentions(turns, gazetteer).toDF() },
+      keep("triples") { Extract.triples(turns).toDF() })
     // transcripts fed only S1/S2; mentions is a terminal output table
     releaseStage(transcripts, mentionsDf)
 
-    // S3 — entity linking (broadcast joins only on the big side).
-    val linkedDf = stage("linked") {
-      EntityLinker.link(triplesDf.as[RawTriple], dict, cfg.useLsh).toDF()
-    }
-    releaseStage(triplesDf)
-
-    // S4 — connected-components canonicalization.
-    val canonDf = stage("canon") {
-      Canonicalize(linkedDf.as[LinkedTriple], dict).toDF()
-    }
-    releaseStage(linkedDf)
-    // Canonicalize tracks its vocabulary-sized intermediates (sides, cmap,
-    // CC contract map) in TempCaches; the canon checkpoint above is the last
-    // consumer, so drop them before S5's corpus-wide jobs need the memory.
-    graft.util.TempCaches.release(spark)
-
-    // S5 — graph materialization; edges partitioned by rel_type (the Spark
-    // analog of the reference's typeRelMap scan index).
-    val canonTyped = canonDf.as[graft.model.CanonTriple]
-    val types = dict.select(col("canonical_name").as("canon_name"), col("entity_type")).distinct()
-    lazy val graph = Materialize.graph(canonTyped, Some(types))
-    // S5a ∥ S5b — node and edge tables both derive from canon only
-    concurrently(
-      stage("nodes", always = true) { graph.nodes },
-      stage("edges", partitionBy = Seq("rel_type"), always = true) { graph.edges })
-    releaseStage(canonDf)
+    graphStages(triplesDf.as[RawTriple], dict, cfg.useLsh, keep, serving = false)
     dict.unpersist(false)
 
     val result = Result(cfg.workDir,
@@ -300,14 +334,7 @@ object PipelineMain {
     val workDir = args(0)
     val nConv = args(1).toLong
     val hubFrac = if (args.length > 2) args(2).toDouble else 0.2
-    // spark-submit injects spark.master; default to local[*] for direct runs
-    val spark = SparkSession.builder().appName("graft-pipeline")
-      .config("spark.master", sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .getOrCreate()
+    val spark = Sessions.submitted("graft-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     val r = Pipeline.run(spark, Pipeline.Config(workDir,
       TranscriptGen.Config(nConv = nConv, hubFrac = hubFrac)))

@@ -115,28 +115,37 @@ object Sessions {
     * the scale knob used for the two-cluster-size scaling evidence
     * (BASELINE.md): same job at local[8] vs local[32].
     */
-  def local(cores: Int, shufflePartitions: Int = -1, appName: String = "graft",
+  def local(cores: Int, appName: String = "graft",
       localDir: Option[String] = None): SparkSession = {
-    // default: shuffle partitions = cores × GRAFT_SHUFFLE_FACTOR (default 1).
-    // A factor > 1 trades scheduling overhead for straggler/tail balance —
-    // AQE still coalesces small exchanges, so the factor mainly bounds the
-    // LARGEST task of skew-prone stages
-    val factor = sys.env.getOrElse("GRAFT_SHUFFLE_FACTOR", "1").toInt
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores * factor
-    val b = SparkSession.builder()
+    val b = builder(appName)
       .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", sp.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
-      // plan strings are rendered for the listener bus on EVERY execution
-      // and every AQE plan update even with the UI off; unbounded, a plan
-      // carrying big expression trees costs driver-minutes per action
-      .config("spark.sql.maxPlanStringLength", "32768")
     // spark.local.dir (shuffle/spill scratch) only applies to the FIRST
     // context in a JVM; Bench points it at tmpfs for the scaling trials
     localDir.foreach(d => b.config("spark.local.dir", d))
     b.getOrCreate()
   }
+
+  /** Session for a spark-submit entry point: keeps the master spark-submit
+    * injected (local[*] when run directly) and, like [[local]], sizes
+    * shuffles to the cores the session got rather than Spark's default 200.
+    */
+  def submitted(appName: String): SparkSession = {
+    val s = builder(appName)
+      .master(sys.props.getOrElse("spark.master", "local[*]"))
+      .getOrCreate()
+    s.conf.set("spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toString)
+    s
+  }
+
+  private def builder(appName: String): SparkSession.Builder =
+    SparkSession.builder()
+      .appName(appName)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      // plan strings are rendered for the listener bus on EVERY execution
+      // and every AQE plan update even with the UI off; unbounded, a plan
+      // carrying big expression trees costs driver-minutes per action
+      .config("spark.sql.maxPlanStringLength", "32768")
 }

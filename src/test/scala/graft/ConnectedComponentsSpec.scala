@@ -37,6 +37,14 @@ class ConnectedComponentsSpec extends SparkTestBase {
     check((0L until 40L).map(i => (i, i + 1)))
   }
 
+  test("a run that has not converged at maxIter fails instead of emitting components") {
+    val path = (0L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](ConnectedComponents.run(path, maxIter = 2))
+    assert(e.getMessage.contains("did not converge in 2 rounds"), e.getMessage)
+    assert(e.getMessage.matches(".*: [1-9][0-9]* edges remain.*"), e.getMessage)
+    assert(ConnectedComponents.run(path).select("component").distinct().count() == 1)
+  }
+
   test("star graph with high-degree hub") {
     check((1L to 200L).map(i => (0L, i)))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Pre-driver smoke of the full SparkEntry contract at sf0.001: every query
@@ -47,6 +48,26 @@ class KgQueriesSpec extends SparkTestBase {
       graft.sources.TpchKg.dict(spark, dir), useLsh = false)
     val methods = linked.select("link_method").distinct().as[String].collect().toSet
     assert(methods == Set("dict/dict"), methods)
+  }
+
+  test("the memoized graph keeps linked, nodes, edges and patternEdges, and releases canon") {
+    // a session the graph has not been memoized for yet
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries("kg_nodes")(s, dir).count()
+    graft.util.TempCaches.release(s)
+    val added = s.sparkContext.getPersistentRDDs.keySet -- before
+    // the kept tables, found as the checkpointed leaves of the queries
+    // served from them: kg_linked (linked), kg_edges (nodes, edges) and
+    // kg_cypher (nodes, patternEdges)
+    val kept = Seq("kg_linked", "kg_edges", "kg_cypher").flatMap { q =>
+      SparkEntry.queries(q)(s, dir).queryExecution.analyzed.collect {
+        case lr: LogicalRDD => lr.rdd.id
+      }
+    }.toSet
+    assert(kept.size == 4, kept)
+    assert(added == kept, s"added $added, kept $kept")
   }
 
   test("entry() (flagship) returns the full edge list") {

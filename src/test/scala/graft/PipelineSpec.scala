@@ -47,6 +47,32 @@ class PipelineSpec extends SparkTestBase {
     rm(dir)
   }
 
+  test("checkpoint = final builds the same graph as all and releases its stage checkpoints") {
+    val all = tmpDir("graft-all")
+    val fin = tmpDir("graft-final")
+    Pipeline.run(spark, cfg(all))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val r = Pipeline.run(spark, cfg(fin).copy(checkpoint = "final"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still registered after the run: $leaked")
+    assert(r.stages.forall(s => !s.resumed && s.rows > 0), r.stages)
+    def rows(dir: String, table: String) =
+      TableIO.read(spark, s"$dir/$table").collect().map(_.toString).sorted.toSeq
+    for (table <- Seq("nodes", "edges")) assert(rows(fin, table) == rows(all, table), table)
+    rm(all); rm(fin)
+  }
+
+  test("a failed concurrent stage releases the other side's checkpoint") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[RuntimeException](Pipeline.concurrently(
+      spark.range(1000).toDF().localCheckpoint(true),
+      throw new RuntimeException("stage failed")))
+    assert(e.getMessage == "stage failed")
+    // Spark holds persistent RDDs weakly, so a GC may drop unrelated ids
+    // in between: the check is that the call left no id registered
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
   test("killed run resumes: committed stages are skipped, outputs identical") {
     val dir = tmpDir("graft-resume")
     val c = cfg(dir)

@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Sessions
+
 /** One shared local session for all suites (JVM-wide — getOrCreate). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local(4, appName = "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(s)
     s
