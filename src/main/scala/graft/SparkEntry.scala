@@ -14,6 +14,7 @@ import graft.operators.similarity.SimilaritySearch
 import graft.operators.text.TextAnalysis
 import graft.plans.Pipeline
 import graft.sources.TpchKg
+import graft.util.Checkpoints
 
 /** Driver contract: one query per implemented operator (SURVEY.md §2 +
   * BASELINE.json pipeline stages + training-data ops), each with a DuckDB
@@ -66,11 +67,13 @@ object SparkEntry {
       // collapsed with the multiplicity): rows are unique on
       // (src, dst, rel_type), so a content hash of exactly that is one —
       // expandVarLength keys relationship uniqueness on it
-      val patternEdges = Pipeline.InMemory("patternEdges") {
-        g.edges.select(col("src"), col("dst"), col("rel_type"))
-          .distinct()
-          .select(GraftFunctions.fnv64(concat_ws(":", col("src"), col("dst"),
-            col("rel_type"))).as("id"), col("src"), col("dst"), col("rel_type"))
+      val patternEdges = Checkpoints.releasingOnFailure(g.nodes, g.edges, linked) {
+        Pipeline.InMemory("patternEdges") {
+          g.edges.select(col("src"), col("dst"), col("rel_type"))
+            .distinct()
+            .select(GraftFunctions.fnv64(concat_ws(":", col("src"), col("dst"),
+              col("rel_type"))).as("id"), col("src"), col("dst"), col("rel_type"))
+        }
       }
       CachedGraph(g, patternEdges, linked)
     })

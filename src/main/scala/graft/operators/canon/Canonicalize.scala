@@ -1,6 +1,6 @@
 package graft.operators.canon
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -18,26 +18,6 @@ import graft.model.{CanonTriple, LinkedTriple}
   */
 object Canonicalize {
 
-  /** Alias-graph edges: one edge per distinct (surface id ↔ resolved id)
-    * resolution observed in the linked triples, plus the dictionary's own
-    * (alias id ↔ canonical id) star so unseen alias variants still cluster.
-    */
-  def aliasEdges(linked: Dataset[LinkedTriple], dict: DataFrame): DataFrame =
-    surfaceEdges(linked)
-      .unionByName(dictSeeds(dict).select(col("id").as("src"), col("root").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-
-  /** The iteration-worthy part of the alias graph: resolutions observed in
-    * the linked triples (surface id ↔ resolved id).
-    */
-  def surfaceEdges(linked: Dataset[LinkedTriple]): DataFrame = {
-    val l = linked.toDF()
-    def sideEdges(idCol: String, nameCol: String): DataFrame =
-      l.select(GraftFunctions.fnv64(lower(trim(col(nameCol)))).as("src"), col(idCol).as("dst"))
-    sideEdges("subj_id", "subj_name").unionByName(sideEdges("obj_id", "obj_name"))
-  }
-
   /** The dictionary's alias→canonical stars as CC seeds — depth-1 components
     * known before any iteration.
     */
@@ -45,18 +25,7 @@ object Canonicalize {
     GraftFunctions.fnv64(col("alias")).as("id"),
     col("canonical_id").cast("long").as("root"))
 
-  /** (id, name, is_dict) for every id the pipeline has seen — the name pool
-    * canonical representatives are chosen from.
-    */
-  def idNames(linked: Dataset[LinkedTriple], dict: DataFrame): DataFrame = {
-    val l = linked.toDF()
-    val fromTriples = l.select(col("subj_id").as("id"), col("subj_name").as("name"))
-      .unionByName(l.select(col("obj_id").as("id"), col("obj_name").as("name")))
-      .withColumn("is_dict", lit(false))
-    fromTriples.unionByName(dictNames(dict)).distinct()
-  }
-
-  /** components(id, component) × idNames → (id, canon_id, canon_name). */
+  /** components(id, component) × names(id, name, is_dict) → (id, canon_id, canon_name). */
   def canonMap(components: DataFrame, names: DataFrame): DataFrame = {
     val member = components.join(names, Seq("id"))
     // min-by (prefer dict names, then lexicographic) via struct ordering
@@ -77,9 +46,9 @@ object Canonicalize {
     val spark = linked.sparkSession
     import spark.implicits._
     // ONE full-stream-width pass over the linked triples serves both CC
-    // edges and the name pool: surfaceEdges and idNames each used to scan +
-    // hash-aggregate the whole stream independently — the stage's two most
-    // expensive jobs doing 90%-overlapping work. `sides` distincts the
+    // edges and the name pool: scanning and hash-aggregating the whole
+    // stream once per consumer would be the stage's two most expensive jobs
+    // doing 90%-overlapping work. `sides` distincts the
     // (id, name) vocabulary once (partial-aggregable: map-side combine
     // crushes the corpus-sized stream to vocabulary size before the
     // exchange); everything downstream is vocabulary-sized.
@@ -109,8 +78,7 @@ object Canonicalize {
         ConnectedComponents.runSeeded(edges, dictSeeds(dict))
     // no distinct: names feeds only canonMap's per-component min(struct) —
     // a multiplicity-blind aggregate — so deduping the union first was one
-    // extra vocabulary-wide shuffle for an identical result (idNames() keeps
-    // the distinct for its public one-row-per-id contract)
+    // extra vocabulary-wide shuffle for an identical result
     val names = sides.withColumn("is_dict", lit(false))
       .unionByName(dictNames(dict))
     // rewrite references cmap in TWO independent join subtrees (subject and
@@ -120,8 +88,11 @@ object Canonicalize {
     rewrite(linked, cmap)
   }
 
-  /** The dictionary's contribution to the name pool (see [[idNames]]). */
-  private def dictNames(dict: DataFrame): DataFrame = dict
+  /** The dictionary's contribution to the name pool canonical
+    * representatives are chosen from: (id, name, is_dict) for every
+    * canonical id and alias id.
+    */
+  private[graft] def dictNames(dict: DataFrame): DataFrame = dict
     .select(col("canonical_id").cast("long").as("id"), col("canonical_name").as("name"))
     .withColumn("is_dict", lit(true))
     .unionByName(dict.select(GraftFunctions.fnv64(col("alias")).as("id"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.util.Checkpoints
+
 /** Connected components over an undirected edge table via the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected Components
   * in MapReduce and Beyond", SoCC'14) expressed as Dataset self-joins —
@@ -96,17 +98,20 @@ object ConnectedComponents {
       // runs only when the one-edge-per-src precondition holds).
       if (!converged && sig._1 == sig._3 && noSrcIsDst(next)) converged = true
       prevSig = sig
-      e.unpersist(false)
+      // the input edges are a persist; every later round is a checkpoint,
+      // which unpersist cannot reach
+      if (iter == 0) e.unpersist(false) else Checkpoints.release(e)
       e = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc] round $iter edges=${sig._1} converged=$converged")
     }
     // an unconverged edge set is not a star set: emitting it would silently
     // split components that the remaining rounds would have merged
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $iter rounds: ${prevSig._1} edges " +
-        s"remain; raise maxIter")
+    if (!converged) {
+      Checkpoints.release(e)
+      throw new IllegalStateException(
+        s"connected components did not converge in $iter rounds: ${prevSig._1} edges " +
+          s"remain; raise maxIter")
+    }
     // At the fixpoint every edge points from a node to its component min.
     val stars = e.select(col("src").as("id"), col("dst").as("component"))
     val roots = e.select(col("dst").as("id")).distinct()
@@ -173,8 +178,8 @@ object ConnectedComponents {
     // distinct BEFORE substitution: the input edge list is typically
     // stream-sized with vocabulary-sized distinct support (one row per
     // observed resolution), so deduping first keeps the two subst joins on
-    // the small side — the same single full-stream shuffle the unseeded
-    // aliasEdges path paid
+    // the small side — the one full-stream shuffle that deduplicating the
+    // whole composed graph would pay too
     val input = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst")).distinct()
       .unionByName(bridges).unionByName(demoted)

@@ -6,7 +6,6 @@ import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -17,7 +16,7 @@ import graft.operators.canon.Canonicalize
 import graft.operators.extract.{Extract, MentionDetector}
 import graft.operators.link.EntityLinker
 import graft.sources.TranscriptGen
-import graft.util.{Sessions, TempCaches}
+import graft.util.{Checkpoints, Sessions, TempCaches}
 
 /** The end-to-end KG-construction pipeline (SURVEY.md §7.2):
   *
@@ -93,24 +92,6 @@ object Pipeline {
   /** The graph tables: committed as snapshots in every checkpoint mode. */
   private val GraphStages = Set("nodes", "edges")
 
-  /** Free a kept stage's checkpoint blocks once every consumer has been
-    * kept. localCheckpoint persists at the RDD layer (not the SQL
-    * CacheManager), so `df.unpersist` can't reach it — the persisted RDD
-    * lives inside the plan's LogicalRDD leaf. Without these releases every
-    * stage's blocks stay resident until session teardown, and the peak
-    * footprint is the WHOLE pipeline's data instead of ~2 live stages: at
-    * 26M turns that pushed a 48g heap into GC collapse (the 32-core config
-    * burned 8× the 8-core config's CPU on the same stages). A cluster job
-    * has the same obligation — upstream cache blocks are released as the
-    * dataflow passes them, whatever the executor count. Snapshot-kept
-    * stages read back from parquet (no LogicalRDD leaf) — no-op there.
-    */
-  private def releaseStage(dfs: Dataset[_]*): Unit =
-    dfs.foreach(_.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    })
-
   /** How [[graphStages]] keeps each stage's output: `keep(name,
     * partitionBy)(compute)` computes the stage and returns the kept table.
     */
@@ -130,8 +111,8 @@ object Pipeline {
     * Deserialized, not MEMORY_AND_DISK_SER: a serialized checkpoint makes
     * every downstream scan re-pay per-row deserialization, and canon reads
     * linked 2-3× (canon 31.4 s at 2 cores serialized vs ~12 s deserialized);
-    * the rows are already compact UnsafeRows, and [[releaseStage]] caps
-    * residency at ~2 live stages.
+    * the rows are already compact UnsafeRows, and releasing each stage once
+    * its consumers are kept caps residency at ~2 live stages.
     */
   private[graft] object InMemory extends Keep {
     def apply(name: String, partitionBy: Seq[String])(compute: => DataFrame): DataFrame =
@@ -161,7 +142,7 @@ object Pipeline {
     (ra, rb) match {
       case (Success(x), Success(y)) => (x, y)
       case _ =>
-        Seq(ra, rb).foreach(_.foreach(releaseStage(_)))
+        Seq(ra, rb).foreach(_.foreach(Checkpoints.release(_)))
         throw Seq(ra, rb).collectFirst { case Failure(e) => e }.get
     }
   }
@@ -177,7 +158,14 @@ object Pipeline {
     * linked and canon); SparkEntry's memoized graph keeps every stage
     * [[InMemory]]. A kept checkpoint is released as soon as its consumers
     * are kept: triples once linked is, linked once canon is, canon once
-    * nodes and edges are.
+    * nodes and edges are; and when a stage fails, the checkpoints it read
+    * are released before the failure is rethrown. Without these releases
+    * every stage's blocks stay resident until session teardown, and the
+    * peak footprint is the WHOLE pipeline's data instead of ~2 live stages:
+    * at 26M turns that pushed a 48g heap into GC collapse (the 32-core
+    * config burned 8× the 8-core config's CPU on the same stages).
+    * Snapshot-kept stages read back from parquet (no LogicalRDD leaf), so
+    * the release is a no-op there.
     *
     * @param serving the graph is built to serve queries: linked stays kept
     *        (kg_linked reads it), and the operators' TempCaches tables are
@@ -193,13 +181,15 @@ object Pipeline {
     import spark.implicits._
     // S3 — entity linking (broadcast joins only on the big side).
     val linked = keep("linked") { EntityLinker.link(triples, dict, useLsh).toDF() }
-    releaseStage(triples)
+    Checkpoints.release(triples)
     // S4 — connected-components canonicalization. Canon consumes linked in
     // two subtrees (the sides vocabulary and the rewrite joins), which is
     // why linked is kept rather than left lazy.
-    val canon = keep("canon") { Canonicalize(linked.as[LinkedTriple], dict).toDF() }
+    val canon = Checkpoints.releasingOnFailure(linked) {
+      keep("canon") { Canonicalize(linked.as[LinkedTriple], dict).toDF() }
+    }
     if (!serving) {
-      releaseStage(linked)
+      Checkpoints.release(linked)
       // Canonicalize tracks its vocabulary-sized intermediates (sides, cmap,
       // CC contract map) in TempCaches; the kept canon is their last consumer
       TempCaches.release(spark)
@@ -209,10 +199,12 @@ object Pipeline {
     val types = dict.select(col("canonical_name").as("canon_name"), col("entity_type")).distinct()
     lazy val graph = Materialize.graph(canon.as[CanonTriple], Some(types))
     // S5a ∥ S5b — node and edge tables both derive from canon only
-    val (nodes, edges) = concurrently(
-      keep("nodes") { graph.nodes },
-      keep("edges", Seq("rel_type")) { graph.edges })
-    releaseStage(canon)
+    val (nodes, edges) = Checkpoints.releasingOnFailure(linked, canon) {
+      concurrently(
+        keep("nodes") { graph.nodes },
+        keep("edges", Seq("rel_type")) { graph.edges })
+    }
+    Checkpoints.release(canon)
     (linked, GraphTables(nodes, edges))
   }
 
@@ -309,7 +301,7 @@ object Pipeline {
       keep("mentions") { Extract.mentions(turns, gazetteer).toDF() },
       keep("triples") { Extract.triples(turns).toDF() })
     // transcripts fed only S1/S2; mentions is a terminal output table
-    releaseStage(transcripts, mentionsDf)
+    Checkpoints.release(transcripts, mentionsDf)
 
     graphStages(triplesDf.as[RawTriple], dict, cfg.useLsh, keep, serving = false)
     dict.unpersist(false)

@@ -100,16 +100,9 @@ object TranscriptGen {
     e.aliases.distinct.map(a => AliasEntry(a.toLowerCase, id, e.canonical, e.typ))
   }
 
-  /** Driver-side dictionary (tests / small configs). Deduplicated: one
-    * canonical per alias (min canonical name wins, deterministic).
-    */
-  def aliasDict(cfg: Config): Seq[AliasEntry] =
-    (0 until cfg.entityCount).flatMap(aliasEntriesFor)
-      .groupBy(_.alias).map { case (_, es) => es.minBy(_.canonical_name) }
-      .toSeq.sortBy(_.alias)
-
-  /** Distributed dictionary — generated on executors, deduplicated by a
-    * (vocabulary-sized) groupBy; the scale path when the vocabulary is large.
+  /** Alias dictionary — generated on executors, deduplicated by a
+    * (vocabulary-sized) groupBy: one canonical per alias (min canonical name
+    * wins, deterministic).
     */
   def aliasDictDs(spark: SparkSession, cfg: Config): DataFrame = {
     import spark.implicits._

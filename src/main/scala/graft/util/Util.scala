@@ -110,6 +110,33 @@ object TempCaches {
   }
 }
 
+/** Release of in-memory checkpoints. localCheckpoint persists at the RDD
+  * layer (not the SQL CacheManager), so `df.unpersist` can't reach it — the
+  * persisted RDD lives inside the plan's LogicalRDD leaf. Without an
+  * explicit release a checkpoint's blocks stay resident until the JVM's GC
+  * happens to collect its RDD, or until session teardown.
+  */
+object Checkpoints {
+  import org.apache.spark.sql.Dataset
+  import org.apache.spark.sql.execution.LogicalRDD
+
+  /** Free the blocks of every checkpoint that `dfs` read, so pass only
+    * tables whose checkpoints have no other consumer. A no-op for plans with
+    * no LogicalRDD leaf (snapshot reads).
+    */
+  def release(dfs: Dataset[_]*): Unit =
+    dfs.foreach(_.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    })
+
+  /** Evaluate `body`; if it throws, release `dfs` before rethrowing — for
+    * checkpoints whose only consumer is `body`.
+    */
+  def releasingOnFailure[T](dfs: Dataset[_]*)(body: => T): T =
+    try body catch { case t: Throwable => release(dfs: _*); throw t }
+}
+
 object Sessions {
   /** Local session with the settings every entry point shares. Parallelism is
     * the scale knob used for the two-cluster-size scaling evidence

@@ -45,6 +45,18 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(ConnectedComponents.run(path).select("component").distinct().count() == 1)
   }
 
+  test("finished rounds release their checkpoints") {
+    val path = (0L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // more than two rounds (see the maxIter test above); the unconverged
+    // run's failure path releases its rounds too
+    intercept[IllegalStateException](ConnectedComponents.run(path, maxIter = 2))
+    assert(ConnectedComponents.run(path).collect().length == 65)
+    // the final round stays: the returned plan still reads it
+    val kept = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(kept.size <= 1, s"round checkpoints still registered: $kept")
+  }
+
   test("star graph with high-degree hub") {
     check((1L to 200L).map(i => (0L, i)))
   }
@@ -84,7 +96,9 @@ class ConnectedComponentsSpec extends SparkTestBase {
       // a star whose root no residual edge ever touches (solitary star)
       (0 until 5).map(i => (2000L + i, 500L)) ++
       // chained seeds: an id seeded to a root that is itself a seeded id
-      Seq((3000L, 1000L), (3001L, 3000L))
+      Seq((3000L, 1000L), (3001L, 3000L)) ++
+      // two roots no residual edge touches: only the bridge joins them
+      Seq((4000L, 700L), (4000L, 701L))
     val seedEdges = seeds.filter(s => s._1 != s._2)
     val full = edges ++ seedEdges
     def partition(m: Map[Long, Long]): Set[Set[Long]] =

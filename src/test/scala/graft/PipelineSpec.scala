@@ -3,9 +3,18 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, lower, trim}
+
+import graft.functions.GraftFunctions
 import graft.io.TableIO
+import graft.model.AliasEntry
+import graft.operators.canon.{Canonicalize, ConnectedComponents}
+import graft.operators.extract.Extract
+import graft.operators.link.EntityLinker
 import graft.plans.Pipeline
 import graft.sources.TranscriptGen
+import graft.util.{Hashing, TempCaches}
 
 /** End-to-end pipeline on a tiny corpus + the resumability gate
   * (BASELINE.md metric 4): a second run over a partially-complete workDir
@@ -71,6 +80,66 @@ class PipelineSpec extends SparkTestBase {
     // Spark holds persistent RDDs weakly, so a GC may drop unrelated ids
     // in between: the check is that the call left no id registered
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
+  private val tinyGen = TranscriptGen.Config(nConv = 12)
+
+  private def tinyStages() =
+    (Extract.triples(TranscriptGen.turns(spark, tinyGen)), TranscriptGen.aliasDictDs(spark, tinyGen))
+
+  test("a failed canon or nodes stage releases the checkpoints kept before it") {
+    val (triples, dict) = tinyStages()
+    for (failing <- Seq("canon", "nodes")) {
+      object failStage extends Pipeline.Keep {
+        def apply(name: String, partitionBy: Seq[String])(compute: => DataFrame): DataFrame =
+          if (name == failing) throw new RuntimeException(s"$name failed")
+          else Pipeline.InMemory(name, partitionBy)(compute)
+      }
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[RuntimeException](
+        Pipeline.graphStages(triples, dict, useLsh = false, failStage, serving = true))
+      assert(e.getMessage == s"$failing failed")
+      // a serving build leaves canon's TempCaches to the caller
+      TempCaches.release(spark)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before), failing)
+    }
+  }
+
+  test("seeded canonicalization matches whole-graph CC over surface edges and dictionary stars") {
+    val (triples, genDict) = tinyStages()
+    val linked = EntityLinker.link(triples, genDict, useLsh = true).cache()
+    // the generated dictionary names one canonical per alias, so canon
+    // alone would merge nothing: list b's lowercase alias under a as well,
+    // so the two entities must merge and a's triples take b's name. b has
+    // the smaller id and the smaller name, so b's contracted surface edge
+    // is a self-loop, only runSeeded's root-root bridge joins a to b, and
+    // a component of a alone would still be named a.
+    val seen = linked.select("subj_name").distinct().as[String].collect().toSet
+    val (b, a) = (0 until tinyGen.entityCount).map(TranscriptGen.entity)
+      .filter(e => seen(e.canonical)).sortBy(_.canonical)
+      .combinations(2).map(p => (p(0), p(1)))
+      .find(p => Hashing.fnv64(p._1.canonical) < Hashing.fnv64(p._2.canonical)).get
+    val dict = genDict.unionByName(Seq(AliasEntry(b.canonical.toLowerCase,
+      Hashing.fnv64(a.canonical), a.canonical, a.typ)).toDF())
+    // the whole-graph path: every observed (surface id -> resolved id)
+    // resolution plus the dictionary's alias -> canonical stars, iterated
+    // by plain CC with no seed contraction
+    val l = linked.toDF()
+    val sides = l.select(col("subj_id").as("id"), col("subj_name").as("name"))
+      .unionByName(l.select(col("obj_id").as("id"), col("obj_name").as("name")))
+    val surface = sides.select(GraftFunctions.fnv64(lower(trim(col("name")))).as("src"),
+      col("id").as("dst"))
+    val stars = Canonicalize.dictSeeds(dict).select(col("id").as("src"), col("root").as("dst"))
+    val comps = ConnectedComponents.run(surface.unionByName(stars))
+    val names = sides.withColumn("is_dict", lit(false)).unionByName(Canonicalize.dictNames(dict))
+    def rows(d: DataFrame) = d.select("subj_id", "subj_name", "obj_id", "obj_name")
+      .as[(Long, String, Long, String)].collect().sorted.toSeq
+    val want = rows(Canonicalize.rewrite(linked, Canonicalize.canonMap(comps, names)).toDF())
+    val got = rows(Canonicalize(linked, dict).toDF())
+    TempCaches.release(spark)
+    linked.unpersist()
+    assert(got.nonEmpty && !got.exists(_._2 == a.canonical), s"${a.canonical} was not merged")
+    assert(got == want)
   }
 
   test("killed run resumes: committed stages are skipped, outputs identical") {
