@@ -54,8 +54,11 @@ import graft.sources.TranscriptGen
   *     trials (one trial is trivially within any factor of itself);
   *  3. `scaling_efficiency` prints null unless both configs pass (2); the
   *     raw ratio is always visible as `scaling_efficiency_raw`;
-  *  4. `measurement_valid` is true only with ≥2 CLEAN trials per config and
-  *     a physically plausible efficiency (≤ 1.15). The pair loop keeps
+  *  4. `measurement_valid` is true only with ≥2 CLEAN trials per config,
+  *     a physically plausible efficiency (≤ 1.15), and neither config of the
+  *     pair asking for more cores than the box has (an oversubscribed config
+  *     is time-sliced, not given the cores, so rule 1 cannot catch it and
+  *     its ratio measures the scheduler, not the job). The pair loop keeps
   *     scheduling (to a 2× hard cap) until this holds or the budget runs out,
   *     and pairs are budget-admitted at the MINIMUM observed pair cost so a
   *     contaminated slow trial can't block its own retry.
@@ -471,9 +474,10 @@ object Bench {
       if (meaningful) Pick(clean, usedClean = true, clean.size, qualified.size)
       else Pick(Seq(qualified.maxBy(_.tput)), usedClean = false, clean.size, qualified.size)
     }
+    val oversubscribed = math.max(loCores, hiCores) > Runtime.getRuntime.availableProcessors()
     def measurementValid: Boolean = {
       val (lo, hi) = (pick(loCores), pick(hiCores))
-      if (lo.nClean < 2 || hi.nClean < 2 || !lo.usedClean || !hi.usedClean) false
+      if (oversubscribed || lo.nClean < 2 || hi.nClean < 2 || !lo.usedClean || !hi.usedClean) false
       else {
         val eff = (median(hi.used.map(_.tput)) / median(lo.used.map(_.tput))) /
           (hiCores.toDouble / loCores)
@@ -549,6 +553,7 @@ object Bench {
             s""""hardware_ceiling_eff_raw":${jnum(ceilEff)},""" +
             s""""scaling_efficiency_normalized":${jnum(effNorm)},""" +
             s""""measurement_valid":$valid,""" +
+            s""""oversubscribed":$oversubscribed,""" +
             s""""protocol":{"pairs_run":${trials.count(t => t.cores == loCores && t.kind == "pipeline")},"interleaved":true,""" +
             s""""forked_pinned_jvms":${trials.forall(_.forked)},""" +
             f""""clean_rule":"cpu_per_turn<=${cpuFactor}%.1fx_best_qualified;>=2_qualified;achieved<=1.1x_requested+0.75",""" +

@@ -14,7 +14,7 @@ import graft.operators.similarity.SimilaritySearch
 import graft.operators.text.TextAnalysis
 import graft.plans.Pipeline
 import graft.sources.TpchKg
-import graft.util.Checkpoints
+import graft.util.{Checkpoints, TempCaches}
 
 /** Driver contract: one query per implemented operator (SURVEY.md §2 +
   * BASELINE.json pipeline stages + training-data ops), each with a DuckDB
@@ -59,10 +59,15 @@ object SparkEntry {
     // cache doesn't retain dead sessions and their persisted plans forever
     graphCache.keySet.removeIf(_._1.sparkContext.isStopped)
     graphCache.computeIfAbsent((s, dir), { _ =>
+      // the transcripts and the dictionary derive from one read of the base
+      // tables; the dictionary feeds link, canon and materialize, so it is
+      // kept for the build and released with the build's other TempCaches
+      val tables = TpchKg.Tables.read(s, dir)
+      val dict = TempCaches.track(TpchKg.dict(tables))
       // Pipeline's stage DAG with every stage kept in memory (lineage cut),
       // so each serving query plans over shallow scans
-      val (linked, g) = Pipeline.graphStages(Extract.triples(TpchKg.turns(s, dir)),
-        TpchKg.dict(s, dir), useLsh = false, Pipeline.InMemory, serving = true)
+      val (linked, g) = Pipeline.graphStages(Extract.triples(TpchKg.turns(tables)),
+        dict, useLsh = false, Pipeline.InMemory, serving = true)
       // the name-distinct view needs its own edge id (provenance ids
       // collapsed with the multiplicity): rows are unique on
       // (src, dst, rel_type), so a content hash of exactly that is one —

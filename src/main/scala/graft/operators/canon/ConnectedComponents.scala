@@ -120,7 +120,9 @@ object ConnectedComponents {
       .groupBy("id").agg(min("component").as("component"))
   }
 
-  /** CC where part of the graph is KNOWN a priori to be depth-1 stars:
+  /** CC where part of the graph is KNOWN a priori to be depth-1 stars —
+    * canonicalization's path for alias graphs too large for one task
+    * (below that size [[Canonicalize]] union-finds the graph in one task):
     * `seeds` (id, root) pins each seeded id into its root's component with
     * zero iteration. This is the pipeline's dictionary shape — the
     * alias→canonical stars dominate the alias graph's edge volume but

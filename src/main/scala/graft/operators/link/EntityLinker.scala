@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.model.{AliasEntry, LinkedTriple, RawTriple}
+import graft.util.TempCaches
 
 /** S3 — entity linking (SURVEY.md §7.2):
   *  (a) exact path: broadcast alias-dictionary equi-join on the normalized
@@ -15,8 +16,9 @@ import graft.model.{AliasEntry, LinkedTriple, RawTriple}
   *  (c) residual: surface-derived id so canonicalization can still cluster
   *      repeated unknown surfaces.
   *
-  * Scale shape: the triple stream is joined only via *broadcast* joins (dict
-  * twice, LSH result twice) — the big side never shuffles. The only
+  * Scale shape: the triple stream is joined only via *broadcast* joins (the
+  * dictionary, or with LSH the resolved surface vocabulary, once per side)
+  * — the big side never shuffles. The only
   * exchanges are over the deduplicated miss-surface set (vocabulary-sized,
   * not corpus-sized). Everything is codegen'd native functions (xxhash64 /
   * transform / array_min / explode) — no UDFs, no mllib pipeline objects.
@@ -96,7 +98,7 @@ object EntityLinker {
     // persist: dAlias feeds BOTH the banded index and the verify join-back,
     // and un-materialized each consumer re-computed every alias's shingle
     // array + signature.
-    val dAlias = graft.util.TempCaches.track(
+    val dAlias = TempCaches.track(
       dict.select(col("alias"), col("canonical_id"), col("canonical_name"))
         .withColumn("d_sh", shingles(col("alias"))))
     // banded index: narrow rows only
@@ -127,6 +129,13 @@ object EntityLinker {
         col("best.canonical_name").as("canonical_name"))
   }
 
+  /** Aliases a broadcast join may ship: the dictionary, and the surface
+    * vocabulary resolved against it, are broadcast while the dictionary has
+    * at most this many rows. Canonicalization uses the same budget for its
+    * one-task path.
+    */
+  val MaxBroadcastAliases = 4000000L
+
   /** Full S3: raw triples → linked triples, broadcast-join only on the big
     * side while the alias vocabulary fits the broadcast budget
     * (`maxBroadcastAliases`); beyond it every dictionary join degrades to a
@@ -134,7 +143,7 @@ object EntityLinker {
     * unavoidable once the dictionary itself is too big to ship).
     */
   def link(triples: Dataset[RawTriple], dict: DataFrame, useLsh: Boolean = true,
-      maxBroadcastAliases: Long = 4000000L): Dataset[LinkedTriple] = {
+      maxBroadcastAliases: Long = MaxBroadcastAliases): Dataset[LinkedTriple] = {
     val spark = triples.sparkSession
     import spark.implicits._
     GraftFunctions.register(spark)
@@ -148,37 +157,37 @@ object EntityLinker {
       .withColumn("s_norm", normCol(col("subj")))
       .withColumn("o_norm", normCol(col("obj")))
 
-    def side(prefix: String): DataFrame = dict.select(
+    def dictSide(prefix: String): DataFrame = dict.select(
       col("alias").as(s"${prefix}_norm"),
       col("canonical_id").as(s"${prefix}_dict_id"),
       col("canonical_name").as(s"${prefix}_dict_name"))
 
-    var r = t
-      .join(hint(side("s")), Seq("s_norm"), "left_outer")
-      .join(hint(side("o")), Seq("o_norm"), "left_outer")
-
-    if (useLsh) {
-      // miss set = distinct norms anti-joined against the dictionary —
-      // avoids a second full pass over the joined triple stream. Shuffle
-      // anti-join: the left side is already hash-partitioned on norm by the
-      // distinct, so only the (vocabulary-sized) dict key column shuffles —
-      // strictly cheaper than a driver-built broadcast of the dict keys.
-      val misses = t.select(col("s_norm").as("norm"))
+    val r = if (useLsh) {
+      // every distinct surface norm is resolved ONCE — dictionary hit, else
+      // LSH over the misses — into a vocabulary-sized table that each side
+      // of the triple stream joins; resolved per side, the LSH subtree (and
+      // the miss set inside it) would run once per join. Both tables
+      // are TempCaches-tracked: vocab feeds the miss set and the resolved
+      // table, resolved feeds both sides' joins.
+      val vocab = TempCaches.track(t.select(col("s_norm").as("norm"))
         .unionByName(t.select(col("o_norm").as("norm")))
         .distinct()
-        .join(dict.select(col("alias").as("norm")), Seq("norm"), "left_anti")
-      val lsh = lshLink(misses, dict)
-      def lshSide(prefix: String): DataFrame = lsh.select(
-        col("norm").as(s"${prefix}_norm"),
-        col("canonical_id").as(s"${prefix}_lsh_id"),
-        col("canonical_name").as(s"${prefix}_lsh_name"))
-      // the LSH result is bounded by the miss-surface vocabulary — same
-      // broadcast budget as the dictionary
-      r = r
-        .join(hint(lshSide("s")), Seq("s_norm"), "left_outer")
-        .join(hint(lshSide("o")), Seq("o_norm"), "left_outer")
+        .join(dict.select(col("alias").as("norm"), col("canonical_id").as("dict_id"),
+          col("canonical_name").as("dict_name")), Seq("norm"), "left_outer"))
+      val lsh = lshLink(vocab.where(col("dict_id").isNull).select(col("norm")), dict)
+        .select(col("norm"), col("canonical_id").as("lsh_id"),
+          col("canonical_name").as("lsh_name"))
+      val resolved = TempCaches.track(vocab.join(lsh, Seq("norm"), "left_outer"))
+      // the resolved vocabulary is the dictionary hits plus the misses the
+      // per-side LSH joins broadcast before — same broadcast budget
+      def side(prefix: String): DataFrame = resolved.select(
+        Seq("norm", "dict_id", "dict_name", "lsh_id", "lsh_name")
+          .map(c => col(c).as(s"${prefix}_$c")): _*)
+      t.join(hint(side("s")), Seq("s_norm"), "left_outer")
+        .join(hint(side("o")), Seq("o_norm"), "left_outer")
     } else {
-      r = r
+      t.join(hint(dictSide("s")), Seq("s_norm"), "left_outer")
+        .join(hint(dictSide("o")), Seq("o_norm"), "left_outer")
         .withColumn("s_lsh_id", lit(null).cast("long"))
         .withColumn("s_lsh_name", lit(null).cast("string"))
         .withColumn("o_lsh_id", lit(null).cast("long"))

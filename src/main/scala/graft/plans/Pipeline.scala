@@ -5,6 +5,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success}
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -119,6 +120,12 @@ object Pipeline {
       compute.localCheckpoint(true)
   }
 
+  /** The local properties that tag a job: group, description, interrupt
+    * flag and scheduler pool.
+    */
+  private val CallerProperties = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.scheduler.pool")
+
   /** Run two INDEPENDENT stages concurrently: Spark's scheduler interleaves
     * the two jobs' tasks, so one stage's straggler tail overlaps the
     * other's work instead of idling the cluster — a pure utilization win
@@ -133,10 +140,23 @@ object Pipeline {
     * checkpoint released before the failure is rethrown — nothing else
     * holds a reference to it, so its blocks would otherwise stay pinned
     * until session teardown.
+    *
+    * Each side runs with the caller's job group, description, interrupt
+    * flag and scheduler pool, so its jobs are tagged like the caller's. The
+    * pool threads would otherwise carry whatever local properties the
+    * thread that created them had. `spark.sql.execution.id` is not copied:
+    * it belongs to the caller's running query, if any.
     */
-  private[graft] def concurrently(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {
-    val fa = Future(a)
-    val fb = Future(b)
+  private[graft] def concurrently(sc: SparkContext)(a: => DataFrame,
+      b: => DataFrame): (DataFrame, DataFrame) = {
+    val props = CallerProperties.map(k => k -> sc.getLocalProperty(k))
+    def tagged(side: => DataFrame): DataFrame = {
+      val saved = CallerProperties.map(k => k -> sc.getLocalProperty(k))
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try side finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+    val fa = Future(tagged(a))
+    val fb = Future(tagged(b))
     val ra = Await.ready(fa, Duration.Inf).value.get
     val rb = Await.ready(fb, Duration.Inf).value.get
     (ra, rb) match {
@@ -200,7 +220,7 @@ object Pipeline {
     lazy val graph = Materialize.graph(canon.as[CanonTriple], Some(types))
     // S5a ∥ S5b — node and edge tables both derive from canon only
     val (nodes, edges) = Checkpoints.releasingOnFailure(linked, canon) {
-      concurrently(
+      concurrently(spark.sparkContext)(
         keep("nodes") { graph.nodes },
         keep("edges", Seq("rel_type")) { graph.edges })
     }
@@ -297,7 +317,7 @@ object Pipeline {
         new MentionDetector.FileIndex(gazPath)
       else MentionDetector.writeIndexFile(TranscriptGen.gazetteerDs(spark, cfg.gen), gazPath)
     }
-    val (mentionsDf, triplesDf) = concurrently(
+    val (mentionsDf, triplesDf) = concurrently(spark.sparkContext)(
       keep("mentions") { Extract.mentions(turns, gazetteer).toDF() },
       keep("triples") { Extract.triples(turns).toDF() })
     // transcripts fed only S1/S2; mentions is a terminal output table

@@ -47,14 +47,14 @@ class ConnectedComponentsSpec extends SparkTestBase {
 
   test("finished rounds release their checkpoints") {
     val path = (0L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = rddsWithBlocks()
     // more than two rounds (see the maxIter test above); the unconverged
     // run's failure path releases its rounds too
     intercept[IllegalStateException](ConnectedComponents.run(path, maxIter = 2))
     assert(ConnectedComponents.run(path).collect().length == 65)
     // the final round stays: the returned plan still reads it
-    val kept = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(kept.size <= 1, s"round checkpoints still registered: $kept")
+    val kept = rddsWithBlocks() -- before
+    assert(kept.size <= 1, s"round checkpoints still holding blocks: $kept")
   }
 
   test("star graph with high-degree hub") {

@@ -54,10 +54,10 @@ class KgQueriesSpec extends SparkTestBase {
     // a session the graph has not been memoized for yet
     val s = spark.newSession()
     graft.functions.GraftFunctions.register(s)
-    val before = s.sparkContext.getPersistentRDDs.keySet
+    val before = rddsWithBlocks()
     SparkEntry.queries("kg_nodes")(s, dir).count()
     graft.util.TempCaches.release(s)
-    val added = s.sparkContext.getPersistentRDDs.keySet -- before
+    val added = rddsWithBlocks() -- before
     // the kept tables, found as the checkpointed leaves of the queries
     // served from them: kg_linked (linked), kg_edges (nodes, edges) and
     // kg_cypher (nodes, patternEdges)

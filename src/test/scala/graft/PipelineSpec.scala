@@ -3,18 +3,18 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit, lower, trim}
 
 import graft.functions.GraftFunctions
 import graft.io.TableIO
-import graft.model.AliasEntry
+import graft.model.{AliasEntry, CanonTriple, LinkedTriple}
 import graft.operators.canon.{Canonicalize, ConnectedComponents}
 import graft.operators.extract.Extract
 import graft.operators.link.EntityLinker
 import graft.plans.Pipeline
 import graft.sources.TranscriptGen
-import graft.util.{Hashing, TempCaches}
+import graft.util.{Checkpoints, Hashing, TempCaches}
 
 /** End-to-end pipeline on a tiny corpus + the resumability gate
   * (BASELINE.md metric 4): a second run over a partially-complete workDir
@@ -60,10 +60,10 @@ class PipelineSpec extends SparkTestBase {
     val all = tmpDir("graft-all")
     val fin = tmpDir("graft-final")
     Pipeline.run(spark, cfg(all))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = rddsWithBlocks()
     val r = Pipeline.run(spark, cfg(fin).copy(checkpoint = "final"))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"RDDs still registered after the run: $leaked")
+    val leaked = rddsWithBlocks() -- before
+    assert(leaked.isEmpty, s"RDDs still holding blocks after the run: $leaked")
     assert(r.stages.forall(s => !s.resumed && s.rows > 0), r.stages)
     def rows(dir: String, table: String) =
       TableIO.read(spark, s"$dir/$table").collect().map(_.toString).sorted.toSeq
@@ -72,14 +72,56 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("a failed concurrent stage releases the other side's checkpoint") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[RuntimeException](Pipeline.concurrently(
+    val before = rddsWithBlocks()
+    val e = intercept[RuntimeException](Pipeline.concurrently(spark.sparkContext)(
       spark.range(1000).toDF().localCheckpoint(true),
       throw new RuntimeException("stage failed")))
     assert(e.getMessage == "stage failed")
-    // Spark holds persistent RDDs weakly, so a GC may drop unrelated ids
-    // in between: the check is that the call left no id registered
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before))
+    assert((rddsWithBlocks() -- before).isEmpty)
+  }
+
+  test("both concurrent sides' jobs carry the caller's job group and description") {
+    val sc = spark.sparkContext
+    // (side, job group, description) of every job a side tagged as its own
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p.getProperty("spark.jobGroup.id") == "concurrently-fence") fence.countDown()
+        else Option(p.getProperty("graft.test.side")).foreach(side => seen.add(
+          (side, p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.description"))))
+      }
+    }
+    def side(name: String) = {
+      sc.setLocalProperty("graft.test.side", name)
+      try spark.range(100).toDF().localCheckpoint(true)
+      finally sc.setLocalProperty("graft.test.side", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the first call's pool threads take the first group as their own;
+      // the second call must still tag both sides with the second group
+      for (group <- Seq("concurrently-a", "concurrently-b")) {
+        sc.setJobGroup(group, s"$group description")
+        val (a, b) = Pipeline.concurrently(sc)(side(s"$group/a"), side(s"$group/b"))
+        Checkpoints.release(a, b)
+      }
+      // the listener bus delivers in order: once the fence job is seen,
+      // every side job before it has been
+      sc.setJobGroup("concurrently-fence", "fence")
+      spark.range(1).count()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = seen.toArray(Array.empty[(String, String, String)]).toSeq
+    for (group <- Seq("concurrently-a", "concurrently-b"); s <- Seq("a", "b"))
+      assert(jobs.exists(_._1 == s"$group/$s"), s"no job seen for $group/$s: $jobs")
+    assert(jobs.forall { case (side, group, desc) =>
+      side.startsWith(s"$group/") && desc == s"$group description"
+    }, jobs)
   }
 
   private val tinyGen = TranscriptGen.Config(nConv = 12)
@@ -95,35 +137,22 @@ class PipelineSpec extends SparkTestBase {
           if (name == failing) throw new RuntimeException(s"$name failed")
           else Pipeline.InMemory(name, partitionBy)(compute)
       }
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val before = rddsWithBlocks()
       val e = intercept[RuntimeException](
         Pipeline.graphStages(triples, dict, useLsh = false, failStage, serving = true))
       assert(e.getMessage == s"$failing failed")
       // a serving build leaves canon's TempCaches to the caller
       TempCaches.release(spark)
-      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before), failing)
+      assert((rddsWithBlocks() -- before).isEmpty, failing)
     }
   }
 
-  test("seeded canonicalization matches whole-graph CC over surface edges and dictionary stars") {
-    val (triples, genDict) = tinyStages()
-    val linked = EntityLinker.link(triples, genDict, useLsh = true).cache()
-    // the generated dictionary names one canonical per alias, so canon
-    // alone would merge nothing: list b's lowercase alias under a as well,
-    // so the two entities must merge and a's triples take b's name. b has
-    // the smaller id and the smaller name, so b's contracted surface edge
-    // is a self-loop, only runSeeded's root-root bridge joins a to b, and
-    // a component of a alone would still be named a.
-    val seen = linked.select("subj_name").distinct().as[String].collect().toSet
-    val (b, a) = (0 until tinyGen.entityCount).map(TranscriptGen.entity)
-      .filter(e => seen(e.canonical)).sortBy(_.canonical)
-      .combinations(2).map(p => (p(0), p(1)))
-      .find(p => Hashing.fnv64(p._1.canonical) < Hashing.fnv64(p._2.canonical)).get
-    val dict = genDict.unionByName(Seq(AliasEntry(b.canonical.toLowerCase,
-      Hashing.fnv64(a.canonical), a.canonical, a.typ)).toDF())
-    // the whole-graph path: every observed (surface id -> resolved id)
-    // resolution plus the dictionary's alias -> canonical stars, iterated
-    // by plain CC with no seed contraction
+  /** Canonicalization as plain connected components over the whole alias
+    * graph — every observed (surface id → resolved id) resolution plus the
+    * dictionary's alias → canonical stars, no seed contraction — named by
+    * `canonMap`: the oracle both canon paths are checked against.
+    */
+  private def wholeGraphCanon(linked: Dataset[LinkedTriple], dict: DataFrame): DataFrame = {
     val l = linked.toDF()
     val sides = l.select(col("subj_id").as("id"), col("subj_name").as("name"))
       .unionByName(l.select(col("obj_id").as("id"), col("obj_name").as("name")))
@@ -132,14 +161,66 @@ class PipelineSpec extends SparkTestBase {
     val stars = Canonicalize.dictSeeds(dict).select(col("id").as("src"), col("root").as("dst"))
     val comps = ConnectedComponents.run(surface.unionByName(stars))
     val names = sides.withColumn("is_dict", lit(false)).unionByName(Canonicalize.dictNames(dict))
-    def rows(d: DataFrame) = d.select("subj_id", "subj_name", "obj_id", "obj_name")
-      .as[(Long, String, Long, String)].collect().sorted.toSeq
-    val want = rows(Canonicalize.rewrite(linked, Canonicalize.canonMap(comps, names)).toDF())
-    val got = rows(Canonicalize(linked, dict).toDF())
-    TempCaches.release(spark)
-    linked.unpersist()
-    assert(got.nonEmpty && !got.exists(_._2 == a.canonical), s"${a.canonical} was not merged")
-    assert(got == want)
+    Canonicalize.rewrite(linked, Canonicalize.canonMap(comps, names)).toDF()
+  }
+
+  test("both canonicalization paths match whole-graph CC on five alias graphs") {
+    def rows(d: DataFrame) = d.as[CanonTriple].collect().sortBy(_.toString).toSeq
+    def entry(alias: String, name: String) = AliasEntry(alias, Hashing.fnv64(name), name, "T")
+    def triple(i: Int, s: (Long, String), o: (Long, String)) =
+      LinkedTriple("c", i, 0, s._1, s._2, "p", o._1, o._2, "x")
+    def surface(name: String) = (Hashing.fnv64(name.trim.toLowerCase), name)
+    def named(name: String) = (Hashing.fnv64(name), name)
+
+    val (triples, genDict) = tinyStages()
+    val genLinked = EntityLinker.link(triples, genDict, useLsh = true).cache()
+    // the generated dictionary names one canonical per alias, so canon
+    // alone would merge nothing: list b's lowercase alias under a as well,
+    // so the two entities must merge and a's triples take b's name. b has
+    // the smaller id and the smaller name, so b's contracted surface edge
+    // is a self-loop, only runSeeded's root-root bridge joins a to b, and
+    // a component of a alone would still be named a.
+    val seen = genLinked.select("subj_name").distinct().as[String].collect().toSet
+    val (b, a) = (0 until tinyGen.entityCount).map(TranscriptGen.entity)
+      .filter(e => seen(e.canonical)).sortBy(_.canonical)
+      .combinations(2).map(p => (p(0), p(1)))
+      .find(p => Hashing.fnv64(p._1.canonical) < Hashing.fnv64(p._2.canonical)).get
+    val bridged = genDict.unionByName(Seq(AliasEntry(b.canonical.toLowerCase,
+      Hashing.fnv64(a.canonical), a.canonical, a.typ)).toDF())
+    val inputs = Seq(
+      ("generated corpus", genLinked, genDict),
+      ("bridging ambiguous alias", genLinked, bridged),
+      // "zeta"'s canonical id is the hash of an alias of Omega: a seed whose
+      // root is itself a seeded id
+      ("root chain", Seq(triple(0, named("zeta"), named("Omega")),
+          triple(1, surface("Zeta Corp"), named("Omega"))).toDS(),
+        Seq(entry("zeta corp", "zeta"), entry("zeta", "Omega"), entry("omega", "Omega")).toDF()),
+      // unresolved surfaces keep their own names: their edges are self-loops
+      ("unresolved case variants", Seq(triple(0, surface("Foo Bar"), surface("FOO BAR")),
+          triple(1, surface("foo bar"), named("Omega"))).toDS(),
+        Seq(entry("omega", "Omega")).toDF()),
+      // U+FF21 sorts before U+1F600 in UTF-8 (EF.. < F0..), after it in
+      // UTF-16 (FF21 > D83D)
+      ("UTF-8 vs UTF-16 name order", Seq(triple(0, (7L, "\uD83D\uDE00"), (7L, "\uFF21")),
+          triple(1, (7L, "\uFF21"), surface("x"))).toDS(),
+        Seq(entry("omega", "Omega")).toDF()))
+    val wants = inputs.map { case (input, linked, dict) =>
+      val want = rows(wholeGraphCanon(linked, dict))
+      for (budget <- Seq(0L, EntityLinker.MaxBroadcastAliases)) {
+        val got = rows(Canonicalize(linked, dict, budget).toDF())
+        TempCaches.release(spark)
+        assert(got == want, s"$input, budget $budget")
+      }
+      input -> want
+    }.toMap
+    genLinked.unpersist()
+    // the inputs exercise what they are named for
+    def subjects(input: String) = wants(input).map(_.subj_name).toSet
+    assert(subjects("bridging ambiguous alias").nonEmpty &&
+      !subjects("bridging ambiguous alias").contains(a.canonical), s"${a.canonical} was not merged")
+    assert(subjects("root chain") == Set("Omega"))
+    assert(subjects("unresolved case variants") == Set("Foo Bar", "foo bar"))
+    assert(subjects("UTF-8 vs UTF-16 name order") == Set("\uFF21"))
   }
 
   test("killed run resumes: committed stages are skipped, outputs identical") {
