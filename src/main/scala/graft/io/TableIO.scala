@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-like table layer (SURVEY.md §7.1): Parquet data files + a JSON
   * snapshot-manifest log + a CURRENT pointer. Gives the snapshot /
@@ -22,9 +23,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   <tableDir>/data/snap-<id>/part-*.parquet   (+ Spark _SUCCESS marker)
-  *   <tableDir>/metadata/v<id>.json             (manifest: files, rows, lineage)
+  *   <tableDir>/metadata/v<id>.json             (manifest: files, rows, lineage, schema)
   *   <tableDir>/metadata/CURRENT                (pointer → latest id)
   * }}}
+  *
+  * The manifest's `schema` field is the DDL string (`StructType.toDDL`) of
+  * the schema a read of the snapshot returns: the data columns, then the
+  * partition columns, every field nullable. [[read]] and [[readAt]] pass it
+  * to `spark.read.schema`, so reading a committed snapshot launches no
+  * Spark job; like Iceberg's table metadata, it spares the reader Parquet's
+  * one-task schema-inference job. A manifest without the field (written
+  * before it existed) is read with inference.
   *
   * Manifest JSON is written by hand (no JSON dep) and read back with
   * `spark.read.json` for audit/lineage queries. Commit protocol: data dir is
@@ -41,7 +50,7 @@ object TableIO {
 
   final case class FileEntry(path: String, bytes: Long, rows: Long)
   final case class Snapshot(id: Long, parent: Long, stage: String, rows: Long,
-      files: Seq[FileEntry], createdMs: Long)
+      files: Seq[FileEntry], createdMs: Long, schema: StructType)
 
   /** Hadoop conf: the active session's (carries fs.s3a.* etc.) when present,
     * else a bare default (still resolves file:// and HDFS from core-site).
@@ -134,7 +143,7 @@ object TableIO {
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val id = currentId(tableDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in $tableDir"))
-    spark.read.parquet(dataDir(tableDir, id).toString)
+    readSnapshot(spark, tableDir, id)
   }
 
   /** Time-travel read of a specific committed snapshot (Iceberg
@@ -147,7 +156,38 @@ object TableIO {
       throw new IllegalStateException(
         s"snapshot $snapshotId of $tableDir is not committed " +
           s"(have: ${snapshotIds(tableDir).mkString(",")})")
-    spark.read.parquet(dataDir(tableDir, snapshotId).toString)
+    readSnapshot(spark, tableDir, snapshotId)
+  }
+
+  /** Read a committed snapshot with the schema its manifest records, else
+    * (an older manifest) with Parquet's schema inference.
+    */
+  private def readSnapshot(spark: SparkSession, tableDir: String, id: Long): DataFrame = {
+    val reader = manifestSchema(tableDir, id).foldLeft(spark.read)(_.schema(_))
+    reader.parquet(dataDir(tableDir, id).toString)
+  }
+
+  private val SchemaField = """"schema":"((?:[^"\\]|\\.)*)"""".r
+
+  private def manifestSchema(tableDir: String, id: Long): Option[StructType] =
+    readString(new Path(metaDir(tableDir), s"v$id.json"))
+      .flatMap(SchemaField.findFirstMatchIn(_))
+      .map(m => StructType.fromDDL(unesc(m.group(1))))
+
+  /** The schema `spark.read.parquet` gives a table written from `schema`:
+    * partition columns moved last, and every field, element and value
+    * nullable, as Parquet reads always are.
+    */
+  private def readSchema(schema: StructType, partitionBy: Seq[String]): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    nullable(StructType(schema.filterNot(f => partitionBy.contains(f.name)) ++
+      partitionBy.map(schema(_)))).asInstanceOf[StructType]
   }
 
   /** Write df as the next snapshot of the table. Per-file lineage rows (path,
@@ -178,7 +218,7 @@ object TableIO {
         .asScala.toSeq.sortBy(_.path)
     }
     val snap = Snapshot(id, parent, stage, files.map(_.rows).sum, files,
-      System.currentTimeMillis())
+      System.currentTimeMillis(), readSchema(df.schema, partitionBy))
     fsOf(metaDir(tableDir)).mkdirs(metaDir(tableDir))
     // manifest write is the commit point; CURRENT is a recoverable hint
     writeString(new Path(metaDir(tableDir), s"v$id.json"), manifestJson(snap))
@@ -218,10 +258,16 @@ object TableIO {
       case c => c.toString
     }
 
+  private def unesc(s: String): String =
+    """\\(u[0-9a-fA-F]{4}|.)""".r.replaceAllIn(s, m => java.util.regex.Matcher.quoteReplacement(
+      if (m.group(1).length == 5) Integer.parseInt(m.group(1).drop(1), 16).toChar.toString
+      else m.group(1)))
+
   private def manifestJson(s: Snapshot): String = {
     val files = s.files.map(f =>
       s"""{"path":"${esc(f.path)}","bytes":${f.bytes},"rows":${f.rows}}""").mkString(",")
     s"""{"snapshot_id":${s.id},"parent_id":${s.parent},"stage":"${esc(s.stage)}",""" +
-      s""""row_count":${s.rows},"created_ms":${s.createdMs},"files":[$files]}"""
+      s""""row_count":${s.rows},"created_ms":${s.createdMs},"files":[$files],""" +
+      s""""schema":"${esc(s.schema.toDDL)}"}"""
   }
 }

@@ -29,10 +29,11 @@ import graft.util.TempCaches
   * Two paths build the same map, chosen from the input size:
   *  - vocabulary plus dictionary within the broadcast budget: the whole
   *    alias graph goes to ONE task, which union-finds it and names each
-  *    component ([[localCanonMap]]), and the rewrite broadcasts the map. At
+  *    component ([[localCanonMap]]) into a one-partition in-memory
+  *    checkpoint, and the rewrite broadcasts the map once to both joins. At
   *    this size the stage's cost is per-job scheduling, not data: on the
   *    benchmark's inputs (1,530 and 2,309 dictionary rows) the seeded path
-  *    runs 28–30 jobs, the one-task path 6;
+  *    runs 28–30 jobs, the one-task path 5;
   *  - beyond it: seeded connected components
   *    ([[ConnectedComponents.runSeeded]]) and a shuffled [[canonMap]].
   */
@@ -99,10 +100,15 @@ object Canonicalize {
     val rows = sides.select(lit(1).as("row")).unionByName(dict.select(lit(1).as("row")))
       .rdd.count()
     if (rows <= maxBroadcastAliases)
-      // not cached: each join side's broadcast job builds the map in its
-      // own task, the two concurrently — caching it cost two more jobs, and
-      // adaptive execution does not reuse one broadcast for both sides
-      rewrite(linked, broadcast(localCanonMap(edges, dictSeeds(dict), names)))
+      // built once, as a one-partition in-memory checkpoint that both join
+      // sides broadcast: over it the two sides' broadcast plans are equal,
+      // so adaptive execution runs one broadcast stage, which union-finds
+      // the map, and reuses it. Without the checkpoint each side's
+      // broadcast ran the union-find in a task of its own (the map's input
+      // scans cached tables, and each cached scan is a query stage of its
+      // own, so the two plans never compare equal).
+      rewrite(linked,
+        broadcast(TempCaches.checkpoint(localCanonMap(edges, dictSeeds(dict), names))))
     else
       // the dictionary stars — the bulk of the alias graph's edges — are
       // contracted before iteration, so CC rounds touch only the

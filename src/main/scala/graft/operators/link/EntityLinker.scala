@@ -20,8 +20,10 @@ import graft.util.TempCaches
   * dictionary, or with LSH the resolved surface vocabulary, once per side)
   * — the big side never shuffles. The only
   * exchanges are over the deduplicated miss-surface set (vocabulary-sized,
-  * not corpus-sized). Everything is codegen'd native functions (xxhash64 /
-  * transform / array_min / explode) — no UDFs, no mllib pipeline objects.
+  * not corpus-sized), and only when it is non-empty: the misses are counted
+  * first, and with none the LSH subtree is not planned. Everything is
+  * codegen'd native functions (xxhash64 / transform / array_min / explode)
+  * — no UDFs, no mllib pipeline objects.
   */
 object EntityLinker {
 
@@ -168,16 +170,27 @@ object EntityLinker {
       // of the triple stream joins; resolved per side, the LSH subtree (and
       // the miss set inside it) would run once per join. Both tables
       // are TempCaches-tracked: vocab feeds the miss set and the resolved
-      // table, resolved feeds both sides' joins.
-      val vocab = TempCaches.track(t.select(col("s_norm").as("norm"))
+      // table, resolved feeds both sides' joins. vocab is a checkpoint, so
+      // that with no misses the two sides share one broadcast of it.
+      val vocab = TempCaches.checkpoint(t.select(col("s_norm").as("norm"))
         .unionByName(t.select(col("o_norm").as("norm")))
         .distinct()
         .join(dict.select(col("alias").as("norm"), col("canonical_id").as("dict_id"),
           col("canonical_name").as("dict_name")), Seq("norm"), "left_outer"))
-      val lsh = lshLink(vocab.where(col("dict_id").isNull).select(col("norm")), dict)
-        .select(col("norm"), col("canonical_id").as("lsh_id"),
-          col("canonical_name").as("lsh_name"))
-      val resolved = TempCaches.track(vocab.join(lsh, Seq("norm"), "left_outer"))
+      val misses = vocab.where(col("dict_id").isNull).select(col("norm"))
+      // one count of the misses, which also fills the vocab checkpoint; an
+      // RDD count, because a Dataset count adds an aggregate exchange. With
+      // no misses the LSH subtree (banding, candidate joins, verify: about
+      // a dozen jobs) has nothing to link, so it is not planned at all.
+      val resolved =
+        if (misses.rdd.count() == 0)
+          vocab.withColumn("lsh_id", lit(null).cast("long"))
+            .withColumn("lsh_name", lit(null).cast("string"))
+        else {
+          val lsh = lshLink(misses, dict).select(col("norm"),
+            col("canonical_id").as("lsh_id"), col("canonical_name").as("lsh_name"))
+          TempCaches.track(vocab.join(lsh, Seq("norm"), "left_outer"))
+        }
       // the resolved vocabulary is the dictionary hits plus the misses the
       // per-side LSH joins broadcast before — same broadcast budget
       def side(prefix: String): DataFrame = resolved.select(

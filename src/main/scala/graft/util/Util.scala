@@ -77,14 +77,15 @@ object TempCaches {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
   private val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
+  private val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
   /** Drop entries whose session has stopped: their cached blocks died with
     * the context, and retaining the DataFrames would pin whole plan/session
     * graphs for the JVM's lifetime in long-lived processes (tests, Bench)
     * whose library callers never call release.
     */
-  private def dropStopped(): Unit =
-    tracked.filterInPlace(df => !df.sparkSession.sparkContext.isStopped)
+  private def dropStopped(): Unit = Seq(tracked, checkpoints)
+    .foreach(_.filterInPlace(df => !df.sparkSession.sparkContext.isStopped))
 
   /** Persist (MEMORY_AND_DISK) and register for scoped release. */
   def track(df: DataFrame): DataFrame = synchronized {
@@ -94,7 +95,26 @@ object TempCaches {
     p
   }
 
-  /** Unpersist every tracked table belonging to `spark`. */
+  /** In-memory checkpoint (`localCheckpoint`), registered for the same
+    * scoped release: for a table built once for several consumers in one
+    * plan. Unlike a cached table, its scan is the same plan in every
+    * consumer, so adaptive execution reuses one exchange over it; each scan
+    * of a cached table becomes a query stage of its own, and two broadcasts
+    * of one cached table run two jobs. Lazy: the table's shuffles run now,
+    * its last stage in the first job that reads it, which keeps it.
+    */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint(false)
+    synchronized {
+      dropStopped()
+      checkpoints += c
+    }
+    c
+  }
+
+  /** Unpersist every tracked table and release every tracked checkpoint
+    * belonging to `spark`.
+    */
   def release(spark: SparkSession): Unit = synchronized {
     dropStopped()
     tracked.filterInPlace { df =>
@@ -102,11 +122,16 @@ object TempCaches {
       if (mine) df.unpersist(blocking = false)
       !mine
     }
+    checkpoints.filterInPlace { df =>
+      val mine = df.sparkSession eq spark
+      if (mine) Checkpoints.release(df)
+      !mine
+    }
   }
 
-  /** Tracked-table count for `spark` (test hook). */
+  /** Tracked-table and checkpoint count for `spark` (test hook). */
   def trackedCount(spark: SparkSession): Int = synchronized {
-    tracked.count(_.sparkSession eq spark)
+    (tracked ++ checkpoints).count(_.sparkSession eq spark)
   }
 }
 

@@ -1,7 +1,11 @@
 package graft
 
-import graft.model.{AliasEntry, RawTriple}
+import org.apache.spark.sql.Dataset
+
+import graft.functions.MinhashSig
+import graft.model.{AliasEntry, LinkedTriple, RawTriple}
 import graft.operators.link.EntityLinker
+import graft.util.{Hashing, TempCaches}
 
 class LinkerSpec extends SparkTestBase {
   import spark.implicits._
@@ -44,6 +48,50 @@ class LinkerSpec extends SparkTestBase {
     assert(ids.length == 1, "same unknown surface must get the same id")
     assert(ids.head == graft.util.Hashing.fnv64("zorblax prime"))
     assert(linked.forall(_.link_method.startsWith("surface/")))
+  }
+
+  /** The sorted rows of `link`, and whether any plan it executed planned a
+    * MinHash signature (the LSH subtree), even one adaptive execution
+    * pruned after the miss set came back empty.
+    */
+  private def linkRows(triples: Dataset[RawTriple],
+      useLsh: Boolean): (Seq[LinkedTriple], Boolean) = {
+    var rows = Seq.empty[LinkedTriple]
+    val plans = plansExecuted {
+      rows = EntityLinker.link(triples, dict, useLsh).collect().toSeq.sortBy(_.toString)
+    }
+    TempCaches.release(spark)
+    val nodes = plans.flatMap(planNodes(_, planned = true))
+    (rows, nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[MinhashSig]))))
+  }
+
+  test("with every surface in the dictionary, LSH linking plans no LSH and links as exact-only") {
+    val triples = Seq(
+      RawTriple("c4", 0, 0, "Ada Lovelace", "WORKS_AT", "ACME CORP"),
+      RawTriple("c4", 1, 0, " a lovelace", "LIVES_IN", "Paris")).toDS()
+    val (rows, ranLsh) = linkRows(triples, useLsh = true)
+    assert(!ranLsh, "an empty miss set still ran the LSH subtree")
+    assert(rows == linkRows(triples, useLsh = false)._1)
+    assert(rows.map(_.link_method).toSet == Set("dict/dict"))
+  }
+
+  test("a mixed input links its misses as lshLink over the misses does") {
+    val triples = Seq(
+      RawTriple("c5", 0, 0, "Ada Lovelace", "WORKS_AT", "Acme Crop"),
+      RawTriple("c5", 1, 0, "Paris", "NEAR", "Zorblax Prime")).toDS()
+    val (rows, ranLsh) = linkRows(triples, useLsh = true)
+    assert(ranLsh)
+    val lsh = EntityLinker.lshLink(Seq("acme crop", "zorblax prime").toDF("norm"), dict)
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
+    // the input exercises both outcomes of the fuzzy path
+    assert(lsh.keySet == Set("acme crop"), lsh)
+    val byTurn = rows.map(l => l.turn_idx -> l).toMap
+    assert(byTurn(0).link_method == "dict/lsh")
+    assert((byTurn(0).obj_id, byTurn(0).obj_name) == lsh("acme crop"))
+    assert((byTurn(0).subj_id, byTurn(0).subj_name) == (Hashing.fnv64("Ada Lovelace"), "Ada Lovelace"))
+    assert(byTurn(1).link_method == "dict/surface")
+    assert((byTurn(1).obj_id, byTurn(1).obj_name) ==
+      (Hashing.fnv64("zorblax prime"), "Zorblax Prime"))
   }
 
   test("lshLink never plans a driver-built broadcast (pinned shuffle joins)") {

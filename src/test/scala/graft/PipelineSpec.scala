@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.MapPartitionsExec
 import org.apache.spark.sql.functions.{col, lit, lower, trim}
 
 import graft.functions.GraftFunctions
@@ -223,6 +224,20 @@ class PipelineSpec extends SparkTestBase {
     assert(subjects("UTF-8 vs UTF-16 name order") == Set("\uFF21"))
   }
 
+  test("the one-task canon map is union-found once and broadcast to both joins") {
+    val (triples, dict) = tinyStages()
+    val linked = EntityLinker.link(triples, dict, useLsh = false).cache()
+    val plans = plansExecuted(Canonicalize(linked, dict).collect())
+    TempCaches.release(spark)
+    linked.unpersist()
+    val unionFinds = plans.flatMap(planNodes(_)).collect {
+      case m: MapPartitionsExec
+          if m.func.getClass.getName.startsWith(Canonicalize.getClass.getName) => m
+    }
+    assert(unionFinds.size == 1, s"${unionFinds.size} union-find stages ran")
+    assert(unionFinds.head.child.outputPartitioning.numPartitions == 1)
+  }
+
   test("killed run resumes: committed stages are skipped, outputs identical") {
     val dir = tmpDir("graft-resume")
     val c = cfg(dir)
@@ -261,6 +276,40 @@ class PipelineSpec extends SparkTestBase {
     val files = row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("files"))
     assert(files.nonEmpty && files.forall(f => f.getAs[Long]("bytes") > 0))
     assert(files.map(_.getAs[Long]("rows")).sum == row.getAs[Long]("row_count"))
+    rm(dir)
+  }
+
+  test("reads use the manifest's schema: inference's schema and rows, no Spark job") {
+    val dir = tmpDir("graft-schema")
+    Pipeline.run(spark, cfg(dir, nConv = 4))
+    val tables = Seq("transcripts", "mentions", "triples", "linked", "canon", "nodes", "edges")
+    def sortedRows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    for (table <- tables) {
+      val t = s"$dir/$table"
+      val id = TableIO.currentId(t).get
+      val manifest = Paths.get(t, "metadata", s"v$id.json")
+      assert(new String(Files.readAllBytes(manifest), "UTF-8").contains("\"schema\":\""), table)
+      val inferred = spark.read.parquet(s"$t/data/snap-$id")
+      var read: DataFrame = null
+      var readAt: DataFrame = null
+      assert(jobsRun { read = TableIO.read(spark, t); readAt = TableIO.readAt(spark, t, id) } == 0,
+        s"$table: reading a snapshot ran a Spark job")
+      assert(read.schema == inferred.schema, table)
+      assert(readAt.schema == inferred.schema, table)
+      assert(sortedRows(read) == sortedRows(inferred), table)
+    }
+    assert(TableIO.read(spark, s"$dir/edges").columns.last == "rel_type")
+    // a manifest written before the schema field existed reads by inference
+    val t = s"$dir/edges"
+    val id = TableIO.currentId(t).get
+    val manifest = Paths.get(t, "metadata", s"v$id.json")
+    val json = new String(Files.readAllBytes(manifest), "UTF-8")
+    val old = json.replaceFirst(""","schema":"(?:[^"\\\\]|\\\\.)*"""", "")
+    assert(old != json && !old.contains("\"schema\""))
+    TableIO.writeString(new org.apache.hadoop.fs.Path(manifest.toString), old)
+    val inferred = TableIO.read(spark, t)
+    assert(inferred.schema == spark.read.parquet(s"$t/data/snap-$id").schema)
+    assert(inferred.count() == TableIO.currentRowCount(t).get)
     rm(dir)
   }
 
