@@ -154,9 +154,10 @@ object SparkEntry {
         TpchKg.entityNames(s, dir).select("name").distinct())
       val vars = ents.select(col("name"),
         explode(array(col("name"), lower(col("name")), upper(col("name")))).as("member"))
-      // chain (not star) edges: name↔lower and lower↔upper — forces the
-      // large-star/small-star alternation to do real multi-round work while
-      // keeping the oracle's components identical
+      // chain (not star) edges: name↔lower and lower↔upper, with the
+      // oracle's components. Within CC's budget (15k names at sf0.1) one
+      // task union-finds them; above it they make the large-star/small-star
+      // rounds do multi-round work
       val e1 = ents.select(GraftFunctions.fnv64(col("name")).as("src"),
         GraftFunctions.fnv64(lower(col("name"))).as("dst"))
       val e2 = ents.select(GraftFunctions.fnv64(lower(col("name"))).as("src"),
@@ -168,7 +169,7 @@ object SparkEntry {
         vars.select(GraftFunctions.fnv64(col("member")).as("id"), col("member")).distinct())
       // runWithVertices keeps variant-free members (name == lower == upper)
       // as their own singleton components — matches the oracle's DISTINCT
-      val comps = ConnectedComponents.runWithVertices(idName.select("id"), edges)
+      val comps = ConnectedComponents.runWithVertices(idName.select("id"), edges).table
       // member is consumed by canon AND the final projection — tracked so
       // the CC-tail groupBy + join doesn't execute twice
       val member = graft.util.TempCaches.track(comps.join(idName, "id"))

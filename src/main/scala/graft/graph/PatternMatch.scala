@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.{Checkpoints, TempCaches}
+
 /** Tiny pattern-match combinator layer over a property graph — the Spark
   * re-expression of the reference's physical operator algebra (SURVEY.md
   * §2.1): NodeScan/RelScan (label/type-pruned scans,
@@ -157,7 +159,8 @@ final case class PatternMatch(nodes: DataFrame, edges: DataFrame) {
     * state grows with |reachable pairs| (the answer size), never with path
     * counts (an enumeration like [[expandVarLength]] would explode on dense
     * graphs). Each round localCheckpoints (lineage cut, like
-    * [[graft.operators.canon.ConnectedComponents]]) and the loop stops
+    * [[graft.operators.canon.ConnectedComponents]]) into TempCaches, so
+    * release TempCaches only after the result's action, and the loop stops
     * early on an empty frontier. Reachability depends only on the start
     * NODE, so the BFS runs over distinct start ids and joins back to
     * `bound` at the end — duplicate bound rows don't multiply BFS work.
@@ -170,24 +173,23 @@ final case class PatternMatch(nodes: DataFrame, edges: DataFrame) {
     val e = typed.select(col("src").as("__sp_src"), col("dst").as("__sp_dst"))
     val starts = bound.select(col(s"${from}_id").as("__sp_start")).distinct()
     // reached = lazy union of per-level CHECKPOINTED frontiers: each level is
-    // already a shallow materialized leaf, so unioning them costs no extra
-    // job — re-checkpointing the union every round (the previous shape) paid
-    // one full materialization pass per BFS level for data already resident
-    var reached = starts
-      .select(col("__sp_start"), col("__sp_start").as("__sp_end"), lit(0L).as("__sp_len"))
-      .localCheckpoint(true)
+    // already a shallow materialized leaf, so unioning them costs no extra job
+    var reached = TempCaches.checkpoint(starts
+      .select(col("__sp_start"), col("__sp_start").as("__sp_end"), lit(0L).as("__sp_len")),
+      eager = true)
     var frontier = reached
     var k = 1
     var exhausted = false
     while (k <= maxHops && !exhausted) {
-      val next = frontier.join(e, col("__sp_end") === col("__sp_src"))
+      val next = TempCaches.checkpoint(frontier.join(e, col("__sp_end") === col("__sp_src"))
         .select(col("__sp_start"), col("__sp_dst").as("__sp_end"), lit(k.toLong).as("__sp_len"))
         .distinct()
         .join(reached.select(col("__sp_start"), col("__sp_end")),
-          Seq("__sp_start", "__sp_end"), "left_anti")
-        .localCheckpoint(true)
+          Seq("__sp_start", "__sp_end"), "left_anti"), eager = true)
       exhausted = next.isEmpty
-      if (!exhausted) {
+      // nothing reads an empty level
+      if (exhausted) Checkpoints.release(next)
+      else {
         reached = reached.unionByName(next)
         frontier = next
       }

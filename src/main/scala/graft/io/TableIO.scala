@@ -190,9 +190,9 @@ object TableIO {
       partitionBy.map(schema(_)))).asInstanceOf[StructType]
   }
 
-  /** Write df as the next snapshot of the table. Per-file lineage rows (path,
-    * bytes, rows) are harvested from the Parquet footers — metadata only, no
-    * extra Spark job over the data.
+  /** Write df as the next snapshot of the table. Per-file lineage rows (path
+    * relative to the snapshot's data dir, bytes, rows) are harvested from the
+    * Parquet footers — metadata only, no extra Spark job over the data.
     */
   def write(df: DataFrame, tableDir: String, stage: String,
       partitionBy: Seq[String] = Nil): Snapshot = {
@@ -207,11 +207,13 @@ object TableIO {
     val conf = hconf
     val files = {
       val paths = new java.util.ArrayList[Path](listParquet(dd).asJava)
-      val ddUri = dd.toUri
+      // qualified like the listed files (`file:` and all), so the paths
+      // come out relative to the data dir
+      val ddUri = fsOf(dd).makeQualified(dd).toUri
       paths.parallelStream()
         .map[FileEntry] { p =>
           val fs = p.getFileSystem(conf)
-          FileEntry(ddUri.relativize(p.toUri).toString,
+          FileEntry(ddUri.relativize(p.toUri).getPath,
             fs.getFileStatus(p).getLen, parquetRows(p, conf))
         }
         .collect(java.util.stream.Collectors.toList[FileEntry])

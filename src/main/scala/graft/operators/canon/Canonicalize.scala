@@ -26,16 +26,12 @@ import graft.util.TempCaches
   * smallest in Spark's string order (UTF-8 bytes) — deterministic and
   * SQL-expressible (the DuckDB oracle reproduces it).
   *
-  * Two paths build the same map, chosen from the input size:
-  *  - vocabulary plus dictionary within the broadcast budget: the whole
-  *    alias graph goes to ONE task, which union-finds it and names each
-  *    component ([[localCanonMap]]) into a one-partition in-memory
-  *    checkpoint, and the rewrite broadcasts the map once to both joins. At
-  *    this size the stage's cost is per-job scheduling, not data: on the
-  *    benchmark's inputs (1,530 and 2,309 dictionary rows) the seeded path
-  *    runs 28–30 jobs, the one-task path 5;
-  *  - beyond it: seeded connected components
-  *    ([[ConnectedComponents.runSeeded]]) and a shuffled [[canonMap]].
+  * [[ConnectedComponents.runSeeded]] (dictionary stars as seeds) picks its
+  * algorithm from the input size and says which it took; canon only names
+  * the components. One-task components are named in their own task, into a
+  * one-partition map the rewrite broadcasts: at this size the stage's cost
+  * is per-job scheduling, and a relational naming more than doubles its
+  * jobs. Components from the rounds are named by a shuffled [[canonMap]].
   */
 object Canonicalize {
 
@@ -60,28 +56,24 @@ object Canonicalize {
 
   /** Rewrite linked triples to canonical ids/names. On the one-task path
     * both rewrite joins broadcast the map, so the triple stream never
-    * shuffles. On the seeded path the joins may re-key the stream on entity
-    * id — the hub entity makes these keys skewed, so AQE skew-join splitting
+    * shuffles. Beyond it the joins may re-key the stream on entity id —
+    * the hub entity makes these keys skewed, so AQE skew-join splitting
     * must be on (set in the session).
     *
-    * @param maxBroadcastAliases the one-task path is taken while the
-    *        vocabulary's (id, name) rows plus the dictionary's rows number
-    *        at most this many — the linker's broadcast budget by default
+    * @param budget CC's budget: vocabulary (id, name) plus dictionary rows
+    *        up to this many take one task
     */
   def apply(linked: Dataset[LinkedTriple], dict: DataFrame,
-      maxBroadcastAliases: Long = EntityLinker.MaxBroadcastAliases): Dataset[CanonTriple] = {
+      budget: Long = EntityLinker.MaxBroadcastAliases): Dataset[CanonTriple] = {
     // ONE full-stream-width pass over the linked triples serves both CC
     // edges and the name pool: scanning and hash-aggregating the whole
     // stream once per consumer would be the stage's two most expensive jobs
     // doing 90%-overlapping work. `sides` distincts the
     // (id, name) vocabulary once (partial-aggregable: map-side combine
     // crushes the corpus-sized stream to vocabulary size before the
-    // exchange); everything downstream is vocabulary-sized.
-    // sides is consumed by the size check, the CC edges and the name pool —
-    // persist it so the corpus-wide scan+exchange that produces it runs
-    // once, not once per consumer.
-    // TempCaches-tracked: released by the pipeline / sweep drivers after the
-    // stage's action.
+    // exchange); everything downstream is vocabulary-sized. It is tracked
+    // because CC's count (which fills it), the CC edges and the name pool
+    // all read it; the pipeline / sweep drivers release it.
     val l = linked.toDF()
     val sides = TempCaches.track(
       l.select(col("subj_id").as("id"), col("subj_name").as("name"))
@@ -94,28 +86,13 @@ object Canonicalize {
     // for an identical result
     val names = sides.withColumn("is_dict", lit(false))
       .unionByName(dictNames(dict))
-    // one count over both inputs, which also fills the sides cache; an RDD
-    // count, because a Dataset count adds an aggregate exchange (and, under
-    // adaptive execution, a job per exchange)
-    val rows = sides.select(lit(1).as("row")).unionByName(dict.select(lit(1).as("row")))
-      .rdd.count()
-    if (rows <= maxBroadcastAliases)
-      // built once, as a one-partition in-memory checkpoint that both join
-      // sides broadcast: over it the two sides' broadcast plans are equal,
-      // so adaptive execution runs one broadcast stage, which union-finds
-      // the map, and reuses it. Without the checkpoint each side's
-      // broadcast ran the union-find in a task of its own (the map's input
-      // scans cached tables, and each cached scan is a query stage of its
-      // own, so the two plans never compare equal).
-      rewrite(linked,
-        broadcast(TempCaches.checkpoint(localCanonMap(edges, dictSeeds(dict), names))))
-    else
-      // the dictionary stars — the bulk of the alias graph's edges — are
-      // contracted before iteration, so CC rounds touch only the
-      // surface-residual edges. The map is kept: its shuffled DAG would
-      // otherwise run once per join side.
-      rewrite(linked, TempCaches.track(
-        canonMap(ConnectedComponents.runSeeded(edges, dictSeeds(dict)), names)))
+    val cc = ConnectedComponents.runSeeded(edges, dictSeeds(dict), budget = budget)
+    // a checkpoint, not a cached table: both rewrite joins then read the
+    // same plan, so adaptive execution builds the map once (each scan of a
+    // cached table is a query stage of its own)
+    val cmap = TempCaches.checkpoint(
+      if (cc.oneTask) localCanonMap(cc.table, names) else canonMap(cc.table, names))
+    rewrite(linked, if (cc.oneTask) broadcast(cmap) else cmap)
   }
 
   /** The dictionary's contribution to the name pool canonical
@@ -128,82 +105,56 @@ object Canonicalize {
     .unionByName(dict.select(GraftFunctions.fnv64(col("alias")).as("id"),
       col("canonical_name").as("name")).withColumn("is_dict", lit(true)))
 
-  /** [[canonMap]] of the connected components of `edges` ∪ `seeds`, built
-    * in one task: the edges, seeds and name pool are coalesced into one
-    * partition, union-found there ([[nameComponents]]), and the map comes
-    * back as a one-partition table — nothing passes through the driver.
-    * The caller bounds the input to what one task holds.
+  /** [[canonMap]] over one-task components, folded in their partition
+    * with the name pool ([[nameComponents]]): no driver collect.
     */
-  private def localCanonMap(edges: DataFrame, seeds: DataFrame, names: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def localCanonMap(components: DataFrame, names: DataFrame): DataFrame = {
+    val spark = components.sparkSession
     import spark.implicits._
-    def edgeRows(src: String, dst: String, from: DataFrame) =
-      from.where(col(src) =!= col(dst)).select(lit(Edge).as("kind"), col(src).as("a"),
-        col(dst).as("b"), lit(null).cast("string").as("name"), lit(false).as("is_dict"))
-    edgeRows("src", "dst", edges)
-      .unionByName(edgeRows("id", "root", seeds))
-      .unionByName(names.where(col("id").isNotNull).select(lit(Name).as("kind"),
-        col("id").as("a"), lit(0L).as("b"), col("name"), col("is_dict")))
+    components.select(col("id"), col("component"), lit(null).cast("string").as("name"),
+        lit(false).as("is_dict"))
+      .unionByName(names.where(col("id").isNotNull).select(col("id"),
+        lit(null).cast("long").as("component"), col("name"), col("is_dict")))
       .coalesce(1)
-      .as[(Int, Long, Long, String, Boolean)]
+      .as[(Long, Option[Long], String, Boolean)]
       .mapPartitions(nameComponents)
       .toDF("id", "canon_name")
       .select(col("id"), GraftFunctions.fnv64(col("canon_name")).as("canon_id"),
         col("canon_name"))
   }
 
-  private final val Edge = 0
-  private final val Name = 1
-
-  /** Union-find over the edge rows, then every id an edge touches is named
-    * after its component's representative: (is_dict desc, name) min, names
-    * in UTF-8 byte order (Spark's string order — `String.compareTo` orders
-    * by UTF-16 code units, which differs above U+FFFF), a null name first.
-    * Rows are (kind, a, b, name, is_dict): an edge a–b, or a name for id a.
+  /** Names every id of a component after the component's representative:
+    * (is_dict desc, name) min, names in UTF-8 byte order (Spark's string
+    * order — `String.compareTo` orders by UTF-16 code units, which differs
+    * above U+FFFF), a null name first. Rows are (id, component, name,
+    * is_dict): a component row (name unset), or a name for the id
+    * (component unset).
     */
   private def nameComponents(
-      rows: Iterator[(Int, Long, Long, String, Boolean)]): Iterator[(Long, String)] = {
-    val index = mutable.LongMap.empty[Int]
-    val ids = mutable.ArrayBuffer.empty[Long]
-    val parent = mutable.ArrayBuffer.empty[Int]
-    def node(id: Long): Int = index.getOrElseUpdate(id, {
-      ids += id
-      parent += parent.size
-      parent.size - 1
-    })
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var y = x
-      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
-      r
-    }
+      rows: Iterator[(Long, Option[Long], String, Boolean)]): Iterator[(Long, String)] = {
     // smallest (is_dict desc, name) seen per id; null = none yet
     final case class Repr(isDict: Boolean, name: UTF8String)
     def better(a: Repr, b: Repr): Boolean =
       if (b == null || a.isDict != b.isDict) b == null || a.isDict
       else if (a.name == null || b.name == null) a.name == null && b.name != null
       else a.name.compareTo(b.name) < 0
+    val componentOf = mutable.LongMap.empty[Long]
     val byId = mutable.LongMap.empty[Repr]
-    rows.foreach { case (kind, a, b, name, isDict) =>
-      if (kind == Edge) {
-        val (ra, rb) = (find(node(a)), find(node(b)))
-        if (ra != rb) parent(ra) = rb
-      } else {
+    rows.foreach {
+      case (id, Some(c), _, _) => componentOf(id) = c
+      case (id, None, name, isDict) =>
         val r = Repr(isDict, UTF8String.fromString(name))
-        if (better(r, byId.getOrElse(a, null))) byId(a) = r
-      }
+        if (better(r, byId.getOrElse(id, null))) byId(id) = r
     }
-    // names of ids no edge touches are not in the map (canonMap's inner join)
-    val byComponent = new Array[Repr](ids.size)
+    // names of ids in no component are not in the map (canonMap's inner join)
+    val byComponent = mutable.LongMap.empty[Repr]
     byId.foreach { case (id, r) =>
-      index.get(id).foreach { i =>
-        val c = find(i)
-        if (better(r, byComponent(c))) byComponent(c) = r
+      componentOf.get(id).foreach { c =>
+        if (better(r, byComponent.getOrElse(c, null))) byComponent(c) = r
       }
     }
-    ids.indices.iterator.flatMap { i =>
-      Option(byComponent(find(i))).map(r => (ids(i), if (r.name == null) null else r.name.toString))
+    componentOf.iterator.flatMap { case (id, c) =>
+      byComponent.get(c).map(r => (id, if (r.name == null) null else r.name.toString))
     }
   }
 

@@ -1,17 +1,24 @@
 package graft.operators.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.util.Checkpoints
+import graft.operators.link.EntityLinker
+import graft.util.{Checkpoints, TempCaches}
 
-/** Connected components over an undirected edge table via the alternating
-  * large-star / small-star algorithm (Kiveris et al., "Connected Components
-  * in MapReduce and Beyond", SoCC'14) expressed as Dataset self-joins —
-  * O(log n) rounds, no driver-side graph, no GraphX/RDD.
+/** Connected components over an undirected edge table. One count of the
+  * input picks the algorithm: at most `budget` rows (the linker's broadcast
+  * budget by default) are union-found in ONE task, where the rounds' cost
+  * would be per-job scheduling, not data ("To Partition, or Not to
+  * Partition", SIGMOD 2021); above it run the alternating large-star /
+  * small-star rounds (Kiveris et al., "Connected Components in MapReduce and
+  * Beyond", SoCC'14) as Dataset self-joins — O(log n) rounds, no
+  * driver-side graph, no GraphX/RDD.
   *
-  * Scale notes (SURVEY.md §7.6(1)):
+  * Scale notes for the rounds (SURVEY.md §7.6(1)):
   *  - the min-neighbor computation is a `groupBy(...).agg(min(...))` —
   *    partial-aggregable, so map-side combine absorbs hub-key skew before any
   *    shuffle (a 10⁸-degree hub contributes one row per input partition);
@@ -27,38 +34,30 @@ import graft.util.Checkpoints
   */
 object ConnectedComponents {
 
+  /** Components (id, component), and whether one task union-found them all. */
+  final case class Components(table: DataFrame, oneTask: Boolean)
+
   /** @param edges DataFrame with long columns (src, dst), undirected.
-    * @return DataFrame (id: Long, component: Long); component = min id in the
-    *         node's component. Every id occurring in edges appears exactly once.
+    * @param budget distinct non-loop edges up to this many take one task
+    * @return (id: Long, component: Long); component = min id in the node's
+    *         component. Every id occurring in edges appears exactly once.
+    *         The table may read TempCaches: release them after its action.
     * @throws IllegalStateException if the rounds have not converged after
     *         `maxIter` rounds.
     */
-  def run(edges: DataFrame, maxIter: Int = 40): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 40,
+      budget: Long = EntityLinker.MaxBroadcastAliases): Components = {
     require(maxIter >= 1, s"maxIter must be at least 1, got $maxIter")
-    val spark = edges.sparkSession
-    var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    require(budget >= 0, s"budget must be at least 0, got $budget")
+    // tracked: the one-task table reads it; the rounds drop it after round 1
+    var e = TempCaches.track(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
+    // the one count picks the algorithm and fills e's cache before the first
+    // round (an empty graph takes the one-task path and emits nothing)
+    if (e.count() <= budget) return Components(oneTask(e), oneTask = true)
     var converged = false
     var iter = 0
-    // Empty graph: nothing to iterate AND nothing to emit (run()'s contract
-    // covers ids occurring in edges — there are none). The seeded pipeline
-    // path hits this whenever the dictionary pre-resolves every observed
-    // surface: without the short-circuit it would still pay a full
-    // large∘small round + checkpoint + re-signature on zero rows.
-    // count(), not the old pre-loop signature aggregate: one pass is still
-    // needed here — it is what populates e's persist before the first round
-    // (a limit-1 probe would materialize one partition and leave the round
-    // to re-run the distinct's map stage) — but the signature arithmetic on
-    // it bought nothing: the convergence compare is seeded by the sentinel
-    // below (round 1 can never match it, and the star-set fixpoint check
-    // already stops single-round graphs without a confirm round).
-    if (e.count() == 0L) {
-      e.unpersist(false)
-      return spark.range(0)
-        .select(col("id"), col("id").as("component"))
-    }
     var prevSig: (Long, String, Long) = (-1L, "", -1L)
     while (!converged && iter < maxIter) {
       // one materialization per round: localCheckpoint(eager) computes the
@@ -98,8 +97,8 @@ object ConnectedComponents {
       // runs only when the one-edge-per-src precondition holds).
       if (!converged && sig._1 == sig._3 && noSrcIsDst(next)) converged = true
       prevSig = sig
-      // the input edges are a persist; every later round is a checkpoint,
-      // which unpersist cannot reach
+      // the input edges are a cached table; every later round is a
+      // checkpoint, which unpersist cannot reach
       if (iter == 0) e.unpersist(false) else Checkpoints.release(e)
       e = next
       iter += 1
@@ -116,21 +115,20 @@ object ConnectedComponents {
     val stars = e.select(col("src").as("id"), col("dst").as("component"))
     val roots = e.select(col("dst").as("id")).distinct()
       .withColumn("component", col("id"))
-    stars.unionByName(roots)
-      .groupBy("id").agg(min("component").as("component"))
+    Components(stars.unionByName(roots)
+      .groupBy("id").agg(min("component").as("component")), oneTask = false)
   }
 
-  /** CC where part of the graph is KNOWN a priori to be depth-1 stars —
-    * canonicalization's path for alias graphs too large for one task
-    * (below that size [[Canonicalize]] union-finds the graph in one task):
-    * `seeds` (id, root) pins each seeded id into its root's component with
-    * zero iteration. This is the pipeline's dictionary shape — the
+  /** CC where part of the graph is KNOWN a priori to be depth-1 stars:
+    * `seeds` (id, root) pins each seeded id into its root's component. The
+    * count of edge plus seed rows picks the algorithm, as in [[run]]: within
+    * `budget` one task union-finds them all; above it the seeds are
+    * contracted first. That fits the pipeline's dictionary shape — the
     * alias→canonical stars dominate the alias graph's edge volume but
     * contribute nothing to the iterative fixpoint (they are already stars),
-    * so they are contracted BEFORE iteration: every edge endpoint is
-    * rewritten through the seed map, [[run]] iterates on the residual graph
-    * only (surface↔entity edges the dictionary didn't pre-resolve), and
-    * seeded ids inherit their root's final component afterwards.
+    * so every edge endpoint is rewritten through the seed map, [[run]] takes
+    * the residual graph only (surface↔entity edges the dictionary didn't
+    * pre-resolve), and seeded ids inherit their root's final component.
     *
     * Robustness (correctness never depends on the seed map being a clean
     * function):
@@ -140,19 +138,28 @@ object ConnectedComponents {
     *    canonical name colliding with another entry's alias) is demoted to
     *    an ordinary edge and iterated like any other.
     *
-    * Component labels are mins over the CONTRACTED id space — a consistent
-    * partition identical to `run(edges ∪ seed-star-edges)`, but label
-    * VALUES can differ (a contracted alias id may undercut every root), so
-    * callers must treat `component` as an opaque grouping key
-    * ([[graft.operators.canon.Canonicalize]] does).
+    * Component labels after contraction are mins over the CONTRACTED id
+    * space — a consistent partition identical to `run(edges ∪
+    * seed-star-edges)`, but label VALUES can differ (a contracted alias id
+    * may undercut every root), so callers must treat `component` as an
+    * opaque grouping key ([[graft.operators.canon.Canonicalize]] does).
     */
-  def runSeeded(edges: DataFrame, seeds: DataFrame, maxIter: Int = 40): DataFrame = {
+  def runSeeded(edges: DataFrame, seeds: DataFrame, maxIter: Int = 40,
+      budget: Long = EntityLinker.MaxBroadcastAliases): Components = {
+    val ed = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src") =!= col("dst"))
+    val sd = seeds.select(col("id").cast("long"), col("root").cast("long"))
+      .where(col("id") =!= col("root"))
+    // an RDD count, because a Dataset count adds an aggregate exchange (and,
+    // under adaptive execution, a job per exchange)
+    val rows = edges.select(lit(1).as("row")).unionByName(seeds.select(lit(1).as("row")))
+      .rdd.count()
+    if (rows <= budget) return Components(
+      oneTask(ed.unionByName(sd.select(col("id").as("src"), col("root").as("dst")))), oneTask = true)
     // no pre-distinct: minRoot's min-agg is multiplicity-blind, and every
     // other consumer of sd (bridges, demoted) flows into edge sets that are
     // deduplicated downstream (input feeds run(), which distincts) — the
     // distinct was a full dict-sized shuffle buying nothing
-    val sd = seeds.select(col("id").cast("long"), col("root").cast("long"))
-      .where(col("id") =!= col("root"))
     val minRoot = sd.groupBy("id").agg(min("root").as("root"))
     // multi-root ids: their non-min roots must still end up connected
     val bridges = sd.join(minRoot.select(col("id"), col("root").as("mroot")), Seq("id"))
@@ -163,10 +170,10 @@ object ConnectedComponents {
     // left_outer join, cached, filtered both ways — previously an anti-join
     // AND a semi-join each re-ran the probe (two dict-sized shuffle stages
     // where one suffices; the canon stage's cost is stage count, not bytes)
-    val marked = graft.util.TempCaches.track(minRoot.join(
+    val marked = TempCaches.track(minRoot.join(
       minRoot.select(col("id").as("root"), lit(true).as("__is_root")),
       Seq("root"), "left_outer"))
-    val contract = graft.util.TempCaches.track(
+    val contract = TempCaches.track(
       marked.where(col("__is_root").isNull).select(col("id"), col("root")))
     val demoted = marked.where(col("__is_root").isNotNull)
       .select(col("id").as("src"), col("root").as("dst"))
@@ -182,12 +189,11 @@ object ConnectedComponents {
     // observed resolution), so deduping first keeps the two subst joins on
     // the small side — the one full-stream shuffle that deduplicating the
     // whole composed graph would pay too
-    val input = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst")).distinct()
-      .unionByName(bridges).unionByName(demoted)
+    val input = ed.distinct().unionByName(bridges).unionByName(demoted)
     val residual = subst(subst(input, "src"), "dst")
       .where(col("src") =!= col("dst"))
-    val comp = run(residual, maxIter)
+    // run's own rule: a residual within the budget is union-found in one task
+    val comp = run(residual, maxIter, budget).table
     // contracted ids inherit their root's component; a root untouched by any
     // residual edge anchors its own star — and must itself appear in the
     // output (run()'s contract: every id of the composed graph is covered)
@@ -204,17 +210,42 @@ object ConnectedComponents {
     // references it via rootRows, and it is entity-dictionary-sized —
     // unpersisting here would recompute it per downstream action instead.
     // Sweep drivers / the pipeline release it after the consuming action.
-    comp.unionByName(rootRows)
-      .groupBy("id").agg(min("component").as("component"))
+    Components(comp.unionByName(rootRows)
+      .groupBy("id").agg(min("component").as("component")), oneTask = false)
   }
 
-  /** Convenience: include isolated vertices from a full vertex list. */
-  def runWithVertices(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame = {
-    val comp = run(edges, maxIter)
-    vertices.select(col("id").cast("long"))
+  /** [[run]], plus isolated vertices from a full vertex list. */
+  def runWithVertices(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40,
+      budget: Long = EntityLinker.MaxBroadcastAliases): Components = {
+    val comp = run(edges, maxIter, budget)
+    comp.copy(table = vertices.select(col("id").cast("long"))
       .distinct()
-      .join(comp, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+      .join(comp.table, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component")))
+  }
+
+  /** The components of `e` (src, dst), union-found in ONE task over one
+    * partition: no driver collect. The smaller root wins each union, so a
+    * root is its component's min id.
+    */
+  private def oneTask(e: DataFrame): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    e.coalesce(1).as[(Long, Long)].mapPartitions { edges =>
+      val parent = mutable.LongMap.empty[Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+        var y = x
+        while (y != r) { val next = parent(y); parent(y) = r; y = next }
+        r
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      parent.keys.toArray.iterator.map(id => (id, find(id)))
+    }.toDF("id", "component")
   }
 
   /** Star-set condition, part 2: no src appears as a dst (part 1 — one edge

@@ -4,8 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.canon.ConnectedComponents
+import graft.operators.link.EntityLinker
+import graft.util.TempCaches
 
-/** Micro-bench for the CC operator: time vs graph shape/size.
+/** Micro-bench for the CC operator: time vs graph shape/size, each shape at
+  * budget 0 (the rounds) and at the default budget (one task while the
+  * shape fits it). Each line names the path that ran.
   * Usage: CcBench [cores] [nEdges]
   */
 object CcBench {
@@ -15,11 +19,15 @@ object CcBench {
     val spark = graft.util.Sessions.local(cores, appName = "graft-ccbench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val c = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($c rows)")
-    }
+    def time(label: String)(f: Long => ConnectedComponents.Components): Unit =
+      for (budget <- Seq(0L, EntityLinker.MaxBroadcastAliases)) {
+        val t0 = System.nanoTime()
+        val cc = f(budget)
+        val c = cc.table.count()
+        val path = if (cc.oneTask) "one task" else "rounds"
+        println(f"$label [$path, budget $budget]: ${(System.nanoTime() - t0) / 1e9}%.2f s ($c rows)")
+        TempCaches.release(spark)
+      }
 
     // star-shaped alias graph (the pipeline's shape): k stars of size 5
     val stars = spark.range(n).select(
@@ -32,11 +40,12 @@ object CcBench {
       pmod(xxhash64(col("id")), lit(n / 4)).as("src"),
       pmod(xxhash64(col("id"), lit(7)), lit(n / 4)).as("dst"))
 
-    time("warmup tiny star")(ConnectedComponents.run(
-      spark.range(100).select((col("id") / 5).cast("long").as("src"), col("id").as("dst"))).count())
-    time(s"stars n=$n")(ConnectedComponents.run(stars).count())
-    time(s"chains(100) n=$n")(ConnectedComponents.run(chains).count())
-    time(s"random n=$n")(ConnectedComponents.run(rand).count())
+    time("warmup tiny star")(b => ConnectedComponents.run(
+      spark.range(100).select((col("id") / 5).cast("long").as("src"), col("id").as("dst")),
+      budget = b))
+    time(s"stars n=$n")(b => ConnectedComponents.run(stars, budget = b))
+    time(s"chains(100) n=$n")(b => ConnectedComponents.run(chains, budget = b))
+    time(s"random n=$n")(b => ConnectedComponents.run(rand, budget = b))
 
     // the pipeline's real shape: FLAT dictionary stars (roots disjoint from
     // member ids, as canonical ids are from alias ids) + a 10%-sized random
@@ -48,16 +57,16 @@ object CcBench {
     val flatStars = spark.range(n).select(
       (lit(10L * n) + (col("id") / 5).cast("long")).as("src"), col("id").as("dst"))
     time(s"flat-stars+residual run n=$n")(
-      ConnectedComponents.run(flatStars.unionByName(residual)).count())
+      b => ConnectedComponents.run(flatStars.unionByName(residual), budget = b))
     time(s"flat-stars+residual SEEDED n=$n")(
-      ConnectedComponents.runSeeded(residual,
-        flatStars.select(col("dst").as("id"), col("src").as("root"))).count())
+      b => ConnectedComponents.runSeeded(residual,
+        flatStars.select(col("dst").as("id"), col("src").as("root")), budget = b))
     // adversarial seeds: the (id/5, id) stars CHAIN (a root is itself a
     // seeded id), so runSeeded demotes nearly every seed back to an edge —
     // the honest no-win case: correctness holds, contraction buys nothing
     val chainedSeeds = stars.select(col("dst").as("id"), col("src").as("root"))
     time(s"chained-stars+residual SEEDED (demotion path) n=$n")(
-      ConnectedComponents.runSeeded(residual, chainedSeeds).count())
+      b => ConnectedComponents.runSeeded(residual, chainedSeeds, budget = b))
     spark.stop()
   }
 }

@@ -100,11 +100,12 @@ object TempCaches {
     * plan. Unlike a cached table, its scan is the same plan in every
     * consumer, so adaptive execution reuses one exchange over it; each scan
     * of a cached table becomes a query stage of its own, and two broadcasts
-    * of one cached table run two jobs. Lazy: the table's shuffles run now,
-    * its last stage in the first job that reads it, which keeps it.
+    * of one cached table run two jobs. Lazy unless `eager`: the table's
+    * shuffles run now, its last stage in the first job that reads it, which
+    * keeps it.
     */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(false)
+  def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val c = df.localCheckpoint(eager)
     synchronized {
       dropStopped()
       checkpoints += c

@@ -259,6 +259,14 @@ class AcceptanceSpec extends SparkTestBase {
     assert(res.count() == 6) // 3 reachable × 2 bound rows, not 3 × 4
   }
 
+  test("shortestPaths: its BFS levels hold no blocks after TempCaches.release") {
+    val before = rddsWithBlocks()
+    // exhausted at depth 4: the empty fifth level is released at once
+    assert(demo.shortestPaths(alice, "n", "b", Set("KNOWS"), maxHops = 10).count() == 4)
+    graft.util.TempCaches.release(spark)
+    assert((rddsWithBlocks() -- before).isEmpty)
+  }
+
   test("expandVarLength rejects unbounded / inverted hop ranges") {
     intercept[IllegalArgumentException] {
       demo.expandVarLength(alice, "n", "b", Set("KNOWS"), minHops = 3, maxHops = 2)

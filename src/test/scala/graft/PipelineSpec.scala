@@ -150,8 +150,9 @@ class PipelineSpec extends SparkTestBase {
 
   /** Canonicalization as plain connected components over the whole alias
     * graph — every observed (surface id → resolved id) resolution plus the
-    * dictionary's alias → canonical stars, no seed contraction — named by
-    * `canonMap`: the oracle both canon paths are checked against.
+    * dictionary's alias → canonical stars, no seed contraction, in CC's
+    * rounds (budget 0) — named by `canonMap`: the oracle both canon paths
+    * are checked against.
     */
   private def wholeGraphCanon(linked: Dataset[LinkedTriple], dict: DataFrame): DataFrame = {
     val l = linked.toDF()
@@ -160,7 +161,7 @@ class PipelineSpec extends SparkTestBase {
     val surface = sides.select(GraftFunctions.fnv64(lower(trim(col("name")))).as("src"),
       col("id").as("dst"))
     val stars = Canonicalize.dictSeeds(dict).select(col("id").as("src"), col("root").as("dst"))
-    val comps = ConnectedComponents.run(surface.unionByName(stars))
+    val comps = ConnectedComponents.run(surface.unionByName(stars), budget = 0).table
     val names = sides.withColumn("is_dict", lit(false)).unionByName(Canonicalize.dictNames(dict))
     Canonicalize.rewrite(linked, Canonicalize.canonMap(comps, names)).toDF()
   }
@@ -230,12 +231,15 @@ class PipelineSpec extends SparkTestBase {
     val plans = plansExecuted(Canonicalize(linked, dict).collect())
     TempCaches.release(spark)
     linked.unpersist()
-    val unionFinds = plans.flatMap(planNodes(_)).collect {
-      case m: MapPartitionsExec
-          if m.func.getClass.getName.startsWith(Canonicalize.getClass.getName) => m
+    def ran(owner: Any) = plans.flatMap(planNodes(_)).collect {
+      case m: MapPartitionsExec if m.func.getClass.getName.startsWith(owner.getClass.getName) => m
     }
-    assert(unionFinds.size == 1, s"${unionFinds.size} union-find stages ran")
-    assert(unionFinds.head.child.outputPartitioning.numPartitions == 1)
+    // CC's union-find, and canon's naming of its components
+    for ((owner, what) <- Seq(ConnectedComponents -> "union-find", Canonicalize -> "naming")) {
+      val stages = ran(owner)
+      assert(stages.size == 1, s"${stages.size} $what stages ran")
+      assert(stages.head.child.outputPartitioning.numPartitions == 1, what)
+    }
   }
 
   test("killed run resumes: committed stages are skipped, outputs identical") {
@@ -270,12 +274,21 @@ class PipelineSpec extends SparkTestBase {
   test("snapshot manifests carry per-file lineage rows") {
     val dir = tmpDir("graft-manifest")
     Pipeline.run(spark, cfg(dir, nConv = 4))
-    val m = TableIO.manifests(spark, s"$dir/triples")
-    val row = m.orderBy(org.apache.spark.sql.functions.desc("snapshot_id")).head()
-    assert(row.getAs[Long]("row_count") > 0)
-    val files = row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("files"))
-    assert(files.nonEmpty && files.forall(f => f.getAs[Long]("bytes") > 0))
-    assert(files.map(_.getAs[Long]("rows")).sum == row.getAs[Long]("row_count"))
+    // triples, and edges, whose files sit in rel_type partition dirs
+    for (table <- Seq("triples", "edges")) {
+      val m = TableIO.manifests(spark, s"$dir/$table")
+      val row = m.orderBy(org.apache.spark.sql.functions.desc("snapshot_id")).head()
+      assert(row.getAs[Long]("row_count") > 0)
+      val files = row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("files"))
+      assert(files.nonEmpty && files.forall(f => f.getAs[Long]("bytes") > 0))
+      assert(files.map(_.getAs[Long]("rows")).sum == row.getAs[Long]("row_count"))
+      // paths are relative to the snapshot's data dir: no scheme, no root
+      val snap = Paths.get(dir, table, "data", s"snap-${row.getAs[Long]("snapshot_id")}")
+      for (path <- files.map(_.getAs[String]("path"))) {
+        assert(!path.matches("[A-Za-z][A-Za-z0-9+.-]*:.*") && !path.startsWith("/"), path)
+        assert(Files.isRegularFile(snap.resolve(path)), path)
+      }
+    }
     rm(dir)
   }
 
