@@ -59,14 +59,13 @@ object SparkEntry {
     // cache doesn't retain dead sessions and their persisted plans forever
     graphCache.keySet.removeIf(_._1.sparkContext.isStopped)
     graphCache.computeIfAbsent((s, dir), { _ =>
-      // the transcripts and the dictionary derive from one read of the base
-      // tables; the dictionary feeds link, canon and materialize, so it is
-      // kept for the build and released with the build's other TempCaches
-      val tables = TpchKg.Tables.read(s, dir)
-      val dict = TempCaches.track(TpchKg.dict(tables))
+      // the dictionary feeds link, canon and materialize, so it is kept for
+      // the build (a checkpoint, whose scans share one broadcast; see
+      // Pipeline.run) and released with the build's other TempCaches
+      val dict = TempCaches.checkpoint(TpchKg.dict(s, dir))
       // Pipeline's stage DAG with every stage kept in memory (lineage cut),
       // so each serving query plans over shallow scans
-      val (linked, g) = Pipeline.graphStages(Extract.triples(TpchKg.turns(tables)),
+      val (linked, g) = Pipeline.graphStages(Extract.triples(TpchKg.turns(s, dir)),
         dict, useLsh = false, Pipeline.InMemory, serving = true)
       // the name-distinct view needs its own edge id (provenance ids
       // collapsed with the multiplicity): rows are unique on

@@ -6,7 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-like table layer (SURVEY.md §7.1): Parquet data files + a JSON
@@ -243,13 +248,49 @@ object TableIO {
     out.result().sortBy(_.toString)
   }
 
-  /** Row count from the Parquet footer (no data read). */
-  def parquetRows(p: Path, conf: Configuration): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+  private def footer(p: Path, conf: Configuration): ParquetMetadata = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-    finally r.close()
+    try r.getFooter finally r.close()
+  }
+
+  /** Row count from the Parquet footer (no data read). */
+  def parquetRows(p: Path, conf: Configuration): Long =
+    footer(p, conf).getBlocks.asScala.map(_.getRowCount.toLong).sum
+
+  /** Read a Parquet source (one file, or a directory of part files) with
+    * the schema of its first data file's footer, read on the driver.
+    * `spark.read.parquet` infers the same schema in a one-task Spark job;
+    * this runs none. The footer's Spark schema
+    * (`org.apache.spark.sql.parquet.row.metadata`, written by Spark) is
+    * used when present, else its Parquet schema is converted under the
+    * session's settings: `ParquetFileFormat.readSchemaFromFooter`, which
+    * inference calls on the same file. Like inference without schema
+    * merging, it assumes the files share one schema.
+    *
+    * A directory with subdirectories (partition columns) or without a data
+    * file, and a session that merges Parquet schemas, are read by
+    * `spark.read.parquet` as before.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val first =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled || !fs.exists(p)) None
+      else if (fs.getFileStatus(p).isFile) Some(p)
+      else {
+        val visible = fs.listStatus(p).toSeq
+          .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+        if (visible.exists(_.isDirectory)) None
+        else visible.map(_.getPath).sortBy(_.getName).headOption
+      }
+    first match {
+      case Some(f) =>
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer(f, conf)),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
   }
 
   private def esc(s: String): String =

@@ -41,11 +41,4 @@ object Salting {
         GraftFunctions.boundedMinSet(col(sampleCol), samplePerKey).as("sample_conv_ids"))
     df.groupBy(keys: _*).agg(aggExprs.head, aggExprs.tail: _*)
   }
-
-  /** Deterministically salted repartition: spreads a hot key's rows across
-    * `salts` partitions without changing row content (for downstream
-    * per-partition work after a skewed stage).
-    */
-  def spread(df: DataFrame, salts: Int, contentCols: Seq[String]): DataFrame =
-    df.repartition(col(contentCols.head), pmod(xxhash64(contentCols.map(col): _*), lit(salts)))
 }

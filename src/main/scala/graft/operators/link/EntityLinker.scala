@@ -150,8 +150,9 @@ object EntityLinker {
     import spark.implicits._
     GraftFunctions.register(spark)
 
-    // one dimension-sized count decides the join strategy (dict is persisted
-    // by the pipeline, so this is a cached scan, not a recompute)
+    // one dimension-sized count decides the join strategy (Pipeline.run and
+    // the memoized graph keep dict as an in-memory checkpoint, which this
+    // count fills)
     val broadcastDict = dict.count() <= maxBroadcastAliases
     def hint(df: DataFrame): DataFrame = if (broadcastDict) broadcast(df) else df
 
@@ -168,10 +169,10 @@ object EntityLinker {
       // every distinct surface norm is resolved ONCE — dictionary hit, else
       // LSH over the misses — into a vocabulary-sized table that each side
       // of the triple stream joins; resolved per side, the LSH subtree (and
-      // the miss set inside it) would run once per join. Both tables
-      // are TempCaches-tracked: vocab feeds the miss set and the resolved
-      // table, resolved feeds both sides' joins. vocab is a checkpoint, so
-      // that with no misses the two sides share one broadcast of it.
+      // the miss set inside it) would run once per join. Both tables are
+      // TempCaches checkpoints: vocab feeds the miss set and the resolved
+      // table, resolved feeds both sides' joins, which share one broadcast
+      // of it (of vocab, with no misses).
       val vocab = TempCaches.checkpoint(t.select(col("s_norm").as("norm"))
         .unionByName(t.select(col("o_norm").as("norm")))
         .distinct()
@@ -189,7 +190,7 @@ object EntityLinker {
         else {
           val lsh = lshLink(misses, dict).select(col("norm"),
             col("canonical_id").as("lsh_id"), col("canonical_name").as("lsh_name"))
-          TempCaches.track(vocab.join(lsh, Seq("norm"), "left_outer"))
+          TempCaches.checkpoint(vocab.join(lsh, Seq("norm"), "left_outer"))
         }
       // the resolved vocabulary is the dictionary hits plus the misses the
       // per-side LSH joins broadcast before — same broadcast budget

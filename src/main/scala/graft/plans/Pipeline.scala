@@ -233,13 +233,20 @@ object Pipeline {
     * resume exact and keeps per-stage plans short.
     */
   def run(spark: SparkSession, cfg: Config): Result = {
-    import spark.implicits._
     GraftFunctions.register(spark)
     checkConfigFingerprint(cfg)
     // dictionary is generated distributed + deduped once, then reused by the
-    // broadcast joins of S3/S4/S5
-    val dict = TranscriptGen.aliasDictDs(spark, cfg.gen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // broadcast joins of S3/S4/S5: a lazy in-memory checkpoint (filled by
+    // the first job that reads it), not a cached table, because adaptive
+    // execution plans each scan of a cached table as a query stage of its
+    // own, while the scans of one checkpoint share one broadcast. Released
+    // when the run ends, also when it fails.
+    val dict = TranscriptGen.aliasDictDs(spark, cfg.gen).localCheckpoint(false)
+    try runStages(spark, cfg, dict) finally Checkpoints.release(dict)
+  }
+
+  private def runStages(spark: SparkSession, cfg: Config, dict: DataFrame): Result = {
+    import spark.implicits._
     val stages = Seq.newBuilder[StageRun]
     def record(name: String, rows: Long, t0: Long): Unit = stages.synchronized {
       stages += StageRun(name, rows, (System.nanoTime() - t0) / 1000000, resumed = false)
@@ -288,12 +295,12 @@ object Pipeline {
       // directly — no second copy of the corpus in checkpoint storage.
       case Some(p) if cfg.inputOrdered =>
         val t0 = System.nanoTime()
-        val df = spark.read.parquet(p)
+        val df = TableIO.readParquet(spark, p)
         record("transcripts", df.count(), t0)
         df
       case _ => keep("transcripts") {
         cfg.transcriptsPath match {
-          case Some(p) => spark.read.parquet(p)
+          case Some(p) => TableIO.readParquet(spark, p)
             .repartitionByRange(col("conv_id"))
             .sortWithinPartitions(col("conv_id"), col("turn_idx"))
           case None => TranscriptGen.turns(spark, cfg.gen).toDF()
@@ -324,7 +331,6 @@ object Pipeline {
     Checkpoints.release(transcripts, mentionsDf)
 
     graphStages(triplesDf.as[RawTriple], dict, cfg.useLsh, keep, serving = false)
-    dict.unpersist(false)
 
     val result = Result(cfg.workDir,
       stages.result().sortBy(s => StageOrder.getOrElse(s.stage, 99)))

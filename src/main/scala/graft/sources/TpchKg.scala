@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.io.TableIO
 import graft.model.Turn
 import graft.operators.extract.MentionDetector
 
@@ -25,34 +26,19 @@ object TpchKg {
 
   val BaseEpoch = 1735689600L // 2025-01-01T00:00:00Z
 
+  /** A fixture table, its schema taken from the file footer (no Spark job). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** The three base tables, each read once: every `spark.read.parquet` is
-    * a schema-inference job, so a caller deriving both the transcripts and
-    * the dictionary reads them through one `Tables`.
-    */
-  final case class Tables(customer: DataFrame, nation: DataFrame, region: DataFrame) {
-    def spark: SparkSession = customer.sparkSession
-  }
-
-  object Tables {
-    def read(spark: SparkSession, dir: String): Tables = Tables(table(spark, dir, "customer"),
-      table(spark, dir, "nation"), table(spark, dir, "region"))
-  }
+    TableIO.readParquet(spark, s"$dir/$name.parquet")
 
   /** customer ⋈ nation ⋈ region (dimension joins are broadcast). */
-  def base(t: Tables): DataFrame =
-    t.customer
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
+  def base(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "customer")
+      .join(broadcast(table(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(table(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
       .select(col("c_custkey"), col("c_name"), col("n_name"), col("r_name"))
 
   /** The transcript table with ts_sec (epoch seconds — engine-stable). */
-  def transcripts(spark: SparkSession, dir: String): DataFrame =
-    transcripts(Tables.read(spark, dir))
-
-  def transcripts(t: Tables): DataFrame = {
+  def transcripts(spark: SparkSession, dir: String): DataFrame = {
     val turnStructs = array(
       struct(lit(0).as("turn_idx"), lit("user").as("role"),
         concat(lit("tell me about "), col("c_name")).as("text")),
@@ -62,7 +48,7 @@ object TpchKg {
         concat(col("n_name"), lit(" is located in "), col("r_name"), lit(".")).as("text")),
       struct(lit(3).as("turn_idx"), lit("assistant").as("role"),
         concat(lower(col("c_name")), lit(" is based in "), lower(col("r_name")), lit(".")).as("text")))
-    base(t)
+    base(spark, dir)
       .select(col("c_custkey"), explode(turnStructs).as("t"))
       .select(
         concat(lit("conv-"), lpad(col("c_custkey").cast("string"), 6, "0")).as("conv_id"),
@@ -74,12 +60,9 @@ object TpchKg {
   }
 
   /** Typed Turn view (real timestamp) feeding the actual pipeline stages. */
-  def turns(spark: SparkSession, dir: String): Dataset[Turn] = turns(Tables.read(spark, dir))
-
-  def turns(t: Tables): Dataset[Turn] = {
-    val spark = t.spark
+  def turns(spark: SparkSession, dir: String): Dataset[Turn] = {
     import spark.implicits._
-    transcripts(t)
+    transcripts(spark, dir)
       .withColumn("ts", timestamp_seconds(col("ts_sec")))
       .drop("ts_sec")
       .as[Turn]
@@ -87,19 +70,16 @@ object TpchKg {
 
   /** Entity-name pool: (name, entity_type). */
   def entityNames(spark: SparkSession, dir: String): DataFrame =
-    entityNames(Tables.read(spark, dir))
-
-  def entityNames(t: Tables): DataFrame =
-    t.customer.select(col("c_name").as("name"), lit("Customer").as("entity_type"))
-      .unionByName(t.nation.select(col("n_name").as("name"), lit("Nation").as("entity_type")))
-      .unionByName(t.region.select(col("r_name").as("name"), lit("Region").as("entity_type")))
+    table(spark, dir, "customer").select(col("c_name").as("name"), lit("Customer").as("entity_type"))
+      .unionByName(table(spark, dir, "nation")
+        .select(col("n_name").as("name"), lit("Nation").as("entity_type")))
+      .unionByName(table(spark, dir, "region")
+        .select(col("r_name").as("name"), lit("Region").as("entity_type")))
 
   /** Alias dictionary from the base tables: alias = lower(name). */
-  def dict(spark: SparkSession, dir: String): DataFrame = dict(Tables.read(spark, dir))
-
-  def dict(t: Tables): DataFrame = {
-    GraftFunctions.register(t.spark)
-    entityNames(t).select(
+  def dict(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
+    entityNames(spark, dir).select(
       lower(col("name")).as("alias"),
       GraftFunctions.fnv64(col("name")).as("canonical_id"),
       col("name").as("canonical_name"),

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.io.TableIO
+
 /** Structured-Streaming operators over the events stream shape
   * (event_id, ts, user_id, event_type, value, props).
   */
@@ -165,6 +167,14 @@ object Streaming {
     * belt-and-braces). This is how a production run closes the books on a
     * bounded replay without weakening the streaming semantics.
     *
+    * The drain is ONE micro-batch. Every sentinel sorts after its user's
+    * real events, so the data batch itself closes and emits every real
+    * session; the query runs with
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false` (for this query
+    * only) so that no empty batch follows it. The events table and the
+    * emitted sessions are read with [[graft.io.TableIO.readParquet]], whose
+    * schema comes from a file footer, so neither read adds a Spark job.
+    *
     * Returns (user_id, start_ms, end_ms, n_events) with epoch-millisecond
     * longs — integer-exact columns only, so the result is oracle-comparable
     * (float sums stay out of the gate).
@@ -183,7 +193,7 @@ object Streaming {
     // the parquet ts column is TIMESTAMP_NTZ; the session runs UTC, so the
     // cast to (ltz) TIMESTAMP — what the Event encoder and unix_millis
     // expect — is lossless
-    val raw = spark.read.parquet(eventsPath)
+    val raw = TableIO.readParquet(spark, eventsPath)
     val rawCols = Seq("event_id", "ts", "user_id", "event_type", "value")
     val events = raw
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
@@ -230,18 +240,28 @@ object Streaming {
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
       .as[Event]
-    val q = sessionizeStream(stream, gapSec)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Session], _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-      }
-      .start()
+    // one micro-batch: the sentinels close every real session inside the
+    // data batch, so the no-data batch that would follow it (state-store
+    // load and commit, offset and commit logs) emits nothing. The setting
+    // is for this query only: a query copies the session's conf when it
+    // starts, and the caller's value is restored right after.
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val callerNoData = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    val q =
+      try sessionizeStream(stream, gapSec)
+        .writeStream
+        .outputMode("append")
+        .option("checkpointLocation", ckDir)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: Dataset[Session], _: Long) =>
+          batch.write.mode("append").parquet(outDir)
+        }
+        .start()
+      finally callerNoData.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
     q.awaitTermination()
 
-    spark.read.parquet(outDir)
+    TableIO.readParquet(spark, outDir)
       .where(unix_millis(col("session_start")) <= maxTsMs) // drop sentinel-born sessions
       .select(col("user_id"),
         unix_millis(col("session_start")).as("start_ms"),
@@ -270,7 +290,9 @@ object Streaming {
     * memory. Like [[sessionizeParquetJob]], a single sentinel event past
     * `max ts + windowDur + watermark` proves every real window closed inside
     * the AvailableNow drain; the sentinel's own window is filtered on
-    * read-back.
+    * read-back. Unlike sessionization this drain keeps its no-data batch:
+    * a window is emitted only once the watermark has passed its end, and
+    * the watermark the sentinel sets takes effect in that batch.
     *
     * Returns (hour_sec, event_type, n) — integer-exact columns only, so the
     * result is oracle-comparable (float sums stay out of the gate; the batch
@@ -288,7 +310,7 @@ object Streaming {
     fs.delete(new org.apache.hadoop.fs.Path(workDir), true)
 
     import spark.implicits._
-    val raw = spark.read.parquet(eventsPath)
+    val raw = TableIO.readParquet(spark, eventsPath)
     val rawCols = Seq("ts", "event_type", "value")
     val events = raw
       .select(col("ts").cast("timestamp").as("ts"), col("event_type"), col("value"))
@@ -331,7 +353,7 @@ object Streaming {
       .start()
     q.awaitTermination()
 
-    spark.read.parquet(outDir)
+    TableIO.readParquet(spark, outDir)
       .where(col("event_type") =!= "__sentinel" &&
         unix_millis(col("window_start")) <= maxTsMs)
       .select(unix_timestamp(col("window_start")).as("hour_sec"),

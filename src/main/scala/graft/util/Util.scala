@@ -201,4 +201,10 @@ object Sessions {
       // and every AQE plan update even with the UI off; unbounded, a plan
       // carrying big expression trees costs driver-minutes per action
       .config("spark.sql.maxPlanStringLength", "32768")
+      // generated-code cache sized to the working set, above the 706 classes
+      // a cold pass over the 65 SparkEntry queries compiles (4 CPUs): the
+      // default of 100 entries cannot hold one cold KG build (~126), so a
+      // repeated query recompiled its classes. A static setting, read once
+      // per JVM by the first session that generates code.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 }

@@ -1,7 +1,16 @@
 package graft
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import graft.io.TableIO
+import graft.streaming.Streaming
 
 /** Pre-driver smoke of the full SparkEntry contract at sf0.001: every query
   * runs and returns rows; a handful of hand-computed invariants guard the
@@ -68,6 +77,51 @@ class KgQueriesSpec extends SparkTestBase {
     }.toSet
     assert(kept.size == 4, kept)
     assert(added == kept, s"added $added, kept $kept")
+  }
+
+  test("readParquet takes the footer's schema: inference's schema and rows, no Spark job") {
+    def sortedRows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    def sameAsInference(path: String, jobs: Int): Unit = {
+      var read: DataFrame = null
+      assert(jobsRun { read = TableIO.readParquet(spark, path) } == jobs, path)
+      val inferred = spark.read.parquet(path)
+      assert(read.schema == inferred.schema, path)
+      assert(sortedRows(read) == sortedRows(inferred), path)
+    }
+    val fixtures = new java.io.File(dir).listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(fixtures.size == 10, fixtures)
+    fixtures.foreach(sameAsInference(_, jobs = 0))
+    // a directory of part files that Spark wrote: the sessions a streaming
+    // query appended
+    val work = tmpDir("graft-footer")
+    Streaming.sessionizeParquetJob(spark, s"$dir/events.parquet", work, gapSec = 43200L)
+    val parts = new java.io.File(s"$work/sessions").list().count(_.endsWith(".parquet"))
+    assert(parts > 1, parts)
+    sameAsInference(s"$work/sessions", jobs = 0)
+    // partition subdirectories: read by inference, which finds the columns
+    val partitioned = s"$work/partitioned"
+    spark.range(10).withColumn("p", col("id") % 3).write.partitionBy("p").parquet(partitioned)
+    sameAsInference(partitioned, jobs = jobsRun(spark.read.parquet(partitioned)))
+    FileUtils.deleteDirectory(new java.io.File(work))
+  }
+
+  test("a repeated query compiles no new class after more new classes than Spark's default cache holds") {
+    def compiled(body: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def q13() = SparkEntry.queries("q13_window")(spark, dir).collect()
+    q13()
+    // 250 distinct generated classes (each literal is inlined into its
+    // code): more than the 100 entries Spark's codegen cache holds by default
+    val others = compiled((1 to 250).foreach { i =>
+      GenerateUnsafeProjection.generate(
+        Seq(Add(BoundReference(0, LongType, nullable = false), Literal(i.toLong + 7919L))))
+    })
+    assert(others == 250)
+    assert(compiled(q13()) == 0, "the repeated query recompiled its classes")
   }
 
   test("entry() (flagship) returns the full edge list") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.adaptive.BroadcastQueryStageExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 import graft.functions.MinhashSig
 import graft.model.{AliasEntry, LinkedTriple, RawTriple}
@@ -50,26 +52,31 @@ class LinkerSpec extends SparkTestBase {
     assert(linked.forall(_.link_method.startsWith("surface/")))
   }
 
-  /** The sorted rows of `link`, and whether any plan it executed planned a
+  /** The sorted rows of `link`, whether any plan it executed planned a
     * MinHash signature (the LSH subtree), even one adaptive execution
-    * pruned after the miss set came back empty.
+    * pruned after the miss set came back empty, and the broadcast stages
+    * of the resolved vocabulary (the `*_lsh_id` columns) it ran.
     */
   private def linkRows(triples: Dataset[RawTriple],
-      useLsh: Boolean): (Seq[LinkedTriple], Boolean) = {
+      useLsh: Boolean): (Seq[LinkedTriple], Boolean, Seq[BroadcastQueryStageExec]) = {
     var rows = Seq.empty[LinkedTriple]
     val plans = plansExecuted {
       rows = EntityLinker.link(triples, dict, useLsh).collect().toSeq.sortBy(_.toString)
     }
     TempCaches.release(spark)
     val nodes = plans.flatMap(planNodes(_, planned = true))
-    (rows, nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[MinhashSig]))))
+    val resolvedBroadcasts = plans.flatMap(planNodes(_)).collect {
+      case b: BroadcastQueryStageExec if b.output.exists(_.name.endsWith("_lsh_id")) => b
+    }
+    (rows, nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[MinhashSig]))),
+      resolvedBroadcasts)
   }
 
   test("with every surface in the dictionary, LSH linking plans no LSH and links as exact-only") {
     val triples = Seq(
       RawTriple("c4", 0, 0, "Ada Lovelace", "WORKS_AT", "ACME CORP"),
       RawTriple("c4", 1, 0, " a lovelace", "LIVES_IN", "Paris")).toDS()
-    val (rows, ranLsh) = linkRows(triples, useLsh = true)
+    val (rows, ranLsh, _) = linkRows(triples, useLsh = true)
     assert(!ranLsh, "an empty miss set still ran the LSH subtree")
     assert(rows == linkRows(triples, useLsh = false)._1)
     assert(rows.map(_.link_method).toSet == Set("dict/dict"))
@@ -79,8 +86,13 @@ class LinkerSpec extends SparkTestBase {
     val triples = Seq(
       RawTriple("c5", 0, 0, "Ada Lovelace", "WORKS_AT", "Acme Crop"),
       RawTriple("c5", 1, 0, "Paris", "NEAR", "Zorblax Prime")).toDS()
-    val (rows, ranLsh) = linkRows(triples, useLsh = true)
+    val (rows, ranLsh, resolvedBroadcasts) = linkRows(triples, useLsh = true)
     assert(ranLsh)
+    // both sides of the triple stream join one broadcast of the resolved
+    // vocabulary: one broadcast stage, reused by the other side
+    assert(resolvedBroadcasts.size == 2, resolvedBroadcasts)
+    assert(resolvedBroadcasts.count(!_.plan.isInstanceOf[ReusedExchangeExec]) == 1,
+      resolvedBroadcasts)
     val lsh = EntityLinker.lshLink(Seq("acme crop", "zorblax prime").toDF("norm"), dict)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
     // the input exercises both outcomes of the fuzzy path

@@ -146,6 +146,17 @@ class PipelineSpec extends SparkTestBase {
       TempCaches.release(spark)
       assert((rddsWithBlocks() -- before).isEmpty, failing)
     }
+    // Pipeline.run releases its dictionary checkpoint when a stage fails:
+    // a plain file where the stage's table dir belongs fails its commit
+    for (failing <- Seq("canon", "nodes")) {
+      val dir = tmpDir("graft-fail")
+      Files.write(Paths.get(dir, failing), Array[Byte](1))
+      val before = rddsWithBlocks()
+      intercept[Exception](Pipeline.run(spark, cfg(dir)))
+      TempCaches.release(spark)
+      assert((rddsWithBlocks() -- before).isEmpty, s"Pipeline.run, $failing")
+      rm(dir)
+    }
   }
 
   /** Canonicalization as plain connected components over the whole alias

@@ -2,8 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 import graft.streaming.Streaming
 import graft.streaming.Streaming.Event
@@ -93,12 +95,38 @@ class StreamingSpec extends SparkTestBase {
     assert(!sessions.exists(_._1 == 2L), s"user 2's session is still open: $sessions")
   }
 
+  /** What `job` returns, and the batch ids of the micro-batches that the
+    * streaming queries it ran reported progress for.
+    */
+  private def microBatches[T](job: => T): (T, Seq[Long]) = {
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        batches.add(e.progress.batchId)
+      // delivered in order: every progress event of the query came before it
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = job
+      assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS), "no query terminated")
+      (out, batches.asScala.toSeq.map(_.longValue))
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("sessionizeParquetJob == batch sessionize on the sf0.001 events table") {
     val eventsPath = "/root/testdata/sf0.001/events.parquet"
     val gapSec = 43200L
-    val got = Streaming.sessionizeParquetJob(spark, eventsPath,
-      tmpDir("graft-st-job"), gapSec)
-      .as[(Long, Long, Long, Long)].collect().toSet
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val callerNoData = spark.conf.getOption(noData)
+    val (sessions, batches) = microBatches(Streaming.sessionizeParquetJob(spark, eventsPath,
+      tmpDir("graft-st-job"), gapSec))
+    assert(batches == Seq(0L), s"the drain ran micro-batches $batches, not one")
+    assert(spark.conf.getOption(noData) == callerNoData, "the session's setting changed")
+    val got = sessions.as[(Long, Long, Long, Long)].collect().toSet
     val events = spark.read.parquet(eventsPath)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
