@@ -146,10 +146,11 @@ object SparkEntry {
     "kg_components" -> ((s, dir) => {
       GraftFunctions.register(s)
       // ents feeds three subtrees (variant explode + both edge sides) and
-      // idName three more (CC vertices, member join, canon join) — tracked
-      // persists so each distinct's union+shuffle runs once, not per
-      // consumer (the duplicated subtrees were ~2 s of the query at sf0.1)
-      val ents = graft.util.TempCaches.track(
+      // idName three more (CC vertices, member join, canon join) — kept
+      // (TempCaches checkpoints) so each distinct's union+shuffle runs once,
+      // not per consumer (the duplicated subtrees were ~2 s of the query at
+      // sf0.1)
+      val ents = TempCaches.checkpoint(
         TpchKg.entityNames(s, dir).select("name").distinct())
       val vars = ents.select(col("name"),
         explode(array(col("name"), lower(col("name")), upper(col("name")))).as("member"))
@@ -164,14 +165,14 @@ object SparkEntry {
       val edges = e1.unionByName(e2).where(col("src") =!= col("dst"))
       // no pre-distinct on vars: idName distincts after the hash anyway —
       // the intermediate distinct was a second full shuffle of the same rows
-      val idName = graft.util.TempCaches.track(
+      val idName = TempCaches.checkpoint(
         vars.select(GraftFunctions.fnv64(col("member")).as("id"), col("member")).distinct())
       // runWithVertices keeps variant-free members (name == lower == upper)
       // as their own singleton components — matches the oracle's DISTINCT
       val comps = ConnectedComponents.runWithVertices(idName.select("id"), edges).table
-      // member is consumed by canon AND the final projection — tracked so
-      // the CC-tail groupBy + join doesn't execute twice
-      val member = graft.util.TempCaches.track(comps.join(idName, "id"))
+      // member is consumed by canon AND the final projection — kept so the
+      // CC-tail groupBy + join doesn't execute twice
+      val member = TempCaches.checkpoint(comps.join(idName, "id"))
       val canon = member.groupBy("component").agg(min("member").as("canon"))
       member.join(canon, "component")
         .select(col("member"), col("canon")).distinct()

@@ -71,11 +71,11 @@ object Canonicalize {
     // doing 90%-overlapping work. `sides` distincts the
     // (id, name) vocabulary once (partial-aggregable: map-side combine
     // crushes the corpus-sized stream to vocabulary size before the
-    // exchange); everything downstream is vocabulary-sized. It is tracked
-    // because CC's count (which fills it), the CC edges and the name pool
-    // all read it; the pipeline / sweep drivers release it.
+    // exchange); everything downstream is vocabulary-sized. It is kept (a
+    // TempCaches checkpoint) because CC's count (which fills it), the CC
+    // edges and the name pool all read it.
     val l = linked.toDF()
-    val sides = TempCaches.track(
+    val sides = TempCaches.checkpoint(
       l.select(col("subj_id").as("id"), col("subj_name").as("name"))
         .unionByName(l.select(col("obj_id").as("id"), col("obj_name").as("name")))
         .distinct())
@@ -87,9 +87,7 @@ object Canonicalize {
     val names = sides.withColumn("is_dict", lit(false))
       .unionByName(dictNames(dict))
     val cc = ConnectedComponents.runSeeded(edges, dictSeeds(dict), budget = budget)
-    // a checkpoint, not a cached table: both rewrite joins then read the
-    // same plan, so adaptive execution builds the map once (each scan of a
-    // cached table is a query stage of its own)
+    // both rewrite joins read the map, and adaptive execution builds it once
     val cmap = TempCaches.checkpoint(
       if (cc.oneTask) localCanonMap(cc.table, names) else canonMap(cc.table, names))
     rewrite(linked, if (cc.oneTask) broadcast(cmap) else cmap)

@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.link.EntityLinker
 import graft.util.{Checkpoints, TempCaches}
@@ -24,8 +23,9 @@ import graft.util.{Checkpoints, TempCaches}
   *    shuffle (a 10⁸-degree hub contributes one row per input partition);
   *  - the propagate join re-keys on node id; AQE skew-join splitting is on
   *    in the session so a hot post-agg join key is split at runtime;
-  *  - each round persists + cuts lineage (the plans would otherwise grow
-  *    exponentially across iterations and re-execute from the source).
+  *  - each round is kept as a checkpoint, which cuts lineage (the plans
+  *    would otherwise grow exponentially across iterations and re-execute
+  *    from the source).
   *
   * Replaces the reference's driver-side entity clustering (the reference has
   * none — its graph is built fully materialized in memory,
@@ -41,7 +41,8 @@ object ConnectedComponents {
     * @param budget distinct non-loop edges up to this many take one task
     * @return (id: Long, component: Long); component = min id in the node's
     *         component. Every id occurring in edges appears exactly once.
-    *         The table may read TempCaches: release them after its action.
+    *         The table may read TempCaches checkpoints: release them after
+    *         its action.
     * @throws IllegalStateException if the rounds have not converged after
     *         `maxIter` rounds.
     */
@@ -49,13 +50,14 @@ object ConnectedComponents {
       budget: Long = EntityLinker.MaxBroadcastAliases): Components = {
     require(maxIter >= 1, s"maxIter must be at least 1, got $maxIter")
     require(budget >= 0, s"budget must be at least 0, got $budget")
-    // tracked: the one-task table reads it; the rounds drop it after round 1
-    var e = TempCaches.track(edges.select(col("src").cast("long"), col("dst").cast("long"))
+    // kept: the one-task table reads it; the rounds drop it after round 1
+    var e = TempCaches.checkpoint(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst"))
       .distinct())
-    // the one count picks the algorithm and fills e's cache before the first
-    // round (an empty graph takes the one-task path and emits nothing)
-    if (e.count() <= budget) return Components(oneTask(e), oneTask = true)
+    // the one count picks the algorithm and fills e before the first round
+    // (an empty graph takes the one-task path and emits nothing); an RDD
+    // count, because a Dataset count adds an aggregate exchange
+    if (e.rdd.count() <= budget) return Components(oneTask(e), oneTask = true)
     var converged = false
     var iter = 0
     var prevSig: (Long, String, Long) = (-1L, "", -1L)
@@ -65,20 +67,19 @@ object ConnectedComponents {
       // plan doesn't embed rounds 0..N-1 (at cluster scale: reliable
       // checkpoint dir instead).
       //
-      // largeStar's output is persisted (lazily — the round's one job
-      // populates it) because smallStar consumes it in TWO subtrees (the
-      // min-neighbor aggregate and the propagate join): un-persisted, the
-      // whole largeStar plan — union, shuffle, join — is duplicated into
-      // both branches and only physical exchange reuse MAY collapse it
-      // (AQE re-planning can break that reuse). Persisting pins single
-      // execution structurally; measured 3.1→1.3 s per round on the
-      // kg_components graph, and at cluster scale it halves the round's
-      // shuffle volume whenever exchange reuse fails. Cost: one in-memory
-      // copy of an edge-set-sized intermediate, released right after the
-      // round materializes.
-      val ls = largeStar(e).persist(StorageLevel.MEMORY_AND_DISK)
+      // largeStar's output is kept too (lazily — the round's one job fills
+      // it) because smallStar consumes it in TWO subtrees (the min-neighbor
+      // aggregate and the propagate join): unkept, the whole largeStar plan
+      // — union, shuffle, join — is duplicated into both branches and only
+      // physical exchange reuse MAY collapse it (AQE re-planning can break
+      // that reuse). Keeping it pins single execution structurally;
+      // measured 3.1→1.3 s per round on the kg_components graph, and at
+      // cluster scale it halves the round's shuffle volume whenever exchange
+      // reuse fails. Cost: one in-memory copy of an edge-set-sized
+      // intermediate, released right after the round materializes.
+      val ls = largeStar(e).localCheckpoint(false)
       val next = smallStar(ls).localCheckpoint(true)
-      ls.unpersist(false)
+      Checkpoints.release(ls)
       // ONE pass over the round's output serves both convergence criteria:
       // the order-independent signature (count + hash sum) and the star-set
       // precondition (count == countDistinct(src)) ride the same aggregate
@@ -97,9 +98,7 @@ object ConnectedComponents {
       // runs only when the one-edge-per-src precondition holds).
       if (!converged && sig._1 == sig._3 && noSrcIsDst(next)) converged = true
       prevSig = sig
-      // the input edges are a cached table; every later round is a
-      // checkpoint, which unpersist cannot reach
-      if (iter == 0) e.unpersist(false) else Checkpoints.release(e)
+      Checkpoints.release(e)
       e = next
       iter += 1
     }
@@ -167,13 +166,13 @@ object ConnectedComponents {
       .select(col("root").as("src"), col("mroot").as("dst"))
     // contract (root is NOT itself a seeded id) and demoted (root IS) are
     // complementary slices of the same root∈ids membership test: ONE marked
-    // left_outer join, cached, filtered both ways — previously an anti-join
+    // left_outer join, kept, filtered both ways — previously an anti-join
     // AND a semi-join each re-ran the probe (two dict-sized shuffle stages
     // where one suffices; the canon stage's cost is stage count, not bytes)
-    val marked = TempCaches.track(minRoot.join(
+    val marked = TempCaches.checkpoint(minRoot.join(
       minRoot.select(col("id").as("root"), lit(true).as("__is_root")),
       Seq("root"), "left_outer"))
-    val contract = TempCaches.track(
+    val contract = TempCaches.checkpoint(
       marked.where(col("__is_root").isNull).select(col("id"), col("root")))
     val demoted = marked.where(col("__is_root").isNotNull)
       .select(col("id").as("src"), col("root").as("dst"))
@@ -206,10 +205,9 @@ object ConnectedComponents {
       .unionByName(contract.select(col("root").as("id"), col("root")))
       .join(compByRoot, Seq("root"), "left_outer")
       .select(col("id"), coalesce(col("component"), col("root")).as("component"))
-    // contract stays persisted (TempCaches-tracked): the returned plan still
-    // references it via rootRows, and it is entity-dictionary-sized —
-    // unpersisting here would recompute it per downstream action instead.
-    // Sweep drivers / the pipeline release it after the consuming action.
+    // contract stays kept: the returned plan still reads it via rootRows,
+    // and it is entity-dictionary-sized. Sweep drivers / the pipeline release
+    // it with TempCaches after the consuming action.
     Components(comp.unionByName(rootRows)
       .groupBy("id").agg(min("component").as("component")), oneTask = false)
   }

@@ -84,14 +84,13 @@ object Dedup {
     // candidates) and they can never pass shingle-Jaccard anyway — the exact
     // path handles identical short docs.
     //
-    // The signature table is MATERIALIZED (persist) before use: it is
-    // consumed three times (banding + both sides of the verify join-back),
-    // and the shingle array must be computed once per row, not re-inlined
-    // into every one of the 16 hash functions × 3 consumers (that plan shape
-    // measured 178 s on 5k docs; materialized, ~3 s). At cluster scale this
-    // is the standard LSH "signature table" checkpoint stage. Tracked in
-    // TempCaches: sweep drivers release it once the query's action completes.
-    val sigd = graft.util.TempCaches.track(docs.select(col(idCol).as("id"),
+    // The signature table is kept (a TempCaches checkpoint): it is consumed
+    // three times (banding + both sides of the verify join-back), and the
+    // shingle array must be computed once per row, not re-inlined into every
+    // one of the 16 hash functions × 3 consumers (that plan shape measured
+    // 178 s on 5k docs; materialized, ~3 s). At cluster scale this is the
+    // standard LSH "signature table" checkpoint stage.
+    val sigd = graft.util.TempCaches.checkpoint(docs.select(col(idCol).as("id"),
       tokenShingles(col(textCol), 3).as("sh"))
       .where(size(col("sh")) > 0)
       .withColumn("sig", minhashSigFromShingles(col("sh"), numHashes)))
@@ -214,11 +213,10 @@ object Dedup {
       threshold: Double, numTables: Int = 16, planesPerTable: Int = 0,
       dim: Int = 64, seed: Long = 42L): DataFrame = {
     import graft.functions.VectorOps
-    // materialized once: consumed by the auto-planes count, the banding
-    // self-join and both sides of the cosine verify (the vector table is the
-    // checkpointed artifact at cluster scale, like minhashLsh's sigd);
-    // tracked in TempCaches for post-query release by sweep drivers
-    val e = graft.util.TempCaches.track(
+    // kept once (a TempCaches checkpoint, like minhashLsh's sigd): read by
+    // the auto-planes count, the banding self-join and both sides of the
+    // cosine verify
+    val e = graft.util.TempCaches.checkpoint(
       emb.select(col(idCol).as("id"), VectorOps.asDouble(col(vecCol)).as("v")))
     embeddingCandidates(e, numTables, planesPerTable, dim, seed)
       .join(e.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
@@ -236,19 +234,19 @@ object Dedup {
   private[graft] def embeddingCandidates(e: DataFrame, numTables: Int,
       planesPerTable: Int, dim: Int, seed: Long): DataFrame = {
     import graft.operators.similarity.SimilaritySearch
+    // an RDD count, because a Dataset count adds an aggregate exchange
     val r =
       if (planesPerTable > 0) planesPerTable
-      else SimilaritySearch.autoPlanes(e.count(), floor = 4)
+      else SimilaritySearch.autoPlanes(e.rdd.count(), floor = 4)
     val sigs = array((0 until numTables).map(tb =>
       struct(lit(tb).as("tb"),
         SimilaritySearch.lshSignature(col("v"), r, dim, seed + tb).as("sig"))): _*)
-    // tracked persist: the self-join consumes banded TWICE (stream side and
-    // the broadcast/hash build side — no exchange reuse across a broadcast
-    // boundary), and each un-materialized consumer re-ran the full
-    // numTables × r × dim hyperplane-signature computation over every
-    // vector. Same shape as minhashLsh's persisted signature table; narrow
+    // kept (a TempCaches checkpoint): the self-join reads banded TWICE
+    // (stream side and build side), and each consumer of an unkept table
+    // re-ran the full numTables × r × dim hyperplane-signature computation
+    // over every vector. Same shape as minhashLsh's signature table; narrow
     // rows (id, tb, sig), numTables per vector.
-    val banded = graft.util.TempCaches.track(
+    val banded = graft.util.TempCaches.checkpoint(
       e.select(col("id"), explode(sigs).as("b"))
         .select(col("id"), col("b.tb").as("tb"), col("b.sig").as("sig")))
     banded.select(col("tb"), col("sig"), col("id").as("id_a"))

@@ -96,11 +96,11 @@ object EntityLinker {
     // un-banded dictionary: one wide row per alias (shingles + names).
     // No pre-distinct — exact duplicate alias rows cannot change the result
     // (candPairs distincts the banded pairs; the final max-by per surface is
-    // multiplicity-blind), so the dedup shuffle bought nothing. Tracked
-    // persist: dAlias feeds BOTH the banded index and the verify join-back,
-    // and un-materialized each consumer re-computed every alias's shingle
-    // array + signature.
-    val dAlias = TempCaches.track(
+    // multiplicity-blind), so the dedup shuffle bought nothing. Kept (a
+    // TempCaches checkpoint): dAlias feeds BOTH the banded index and the
+    // verify join-back, and unkept each consumer re-computed every alias's
+    // shingle array + signature.
+    val dAlias = TempCaches.checkpoint(
       dict.select(col("alias"), col("canonical_id"), col("canonical_name"))
         .withColumn("d_sh", shingles(col("alias"))))
     // banded index: narrow rows only
@@ -152,8 +152,9 @@ object EntityLinker {
 
     // one dimension-sized count decides the join strategy (Pipeline.run and
     // the memoized graph keep dict as an in-memory checkpoint, which this
-    // count fills)
-    val broadcastDict = dict.count() <= maxBroadcastAliases
+    // count fills); an RDD count, because a Dataset count adds an aggregate
+    // exchange
+    val broadcastDict = dict.rdd.count() <= maxBroadcastAliases
     def hint(df: DataFrame): DataFrame = if (broadcastDict) broadcast(df) else df
 
     val t = triples.toDF()

@@ -171,9 +171,9 @@ object SimilaritySearch {
     // oracle reruns it in HUGEINT mod-2^64), which is what lets the IVF
     // result be hash-gated instead of rows-only
     val h = graft.functions.GraftFunctions.avalanche64(col("neighbor_id") + lit(seed))
-    // the training sample is re-scanned once per Lloyd round — persist it
-    // (≤ trainCap rows; TempCaches so sweep drivers release it post-query)
-    val train = graft.util.TempCaches.track(
+    // the training sample is re-scanned once per Lloyd round — keep it
+    // (≤ trainCap rows, a TempCaches checkpoint)
+    val train = graft.util.TempCaches.checkpoint(
       if (n <= trainCap) c0
       else c0.where(pmod(h, lit(math.max(1L, n / trainCap))) === 0))
 
@@ -213,13 +213,13 @@ object SimilaritySearch {
         .groupBy("cell")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("x")))),
           s => s.getField("x")).as("cvec"))
-      // each round's centroids are persisted (≤ cells tiny rows): the lazy
-      // chain would otherwise replay EVERY earlier round at each downstream
-      // use (each broadcast of `centroids` re-evaluates its whole lineage).
-      // The persist is left LAZY — the next round's (or the index pass's)
-      // first job materializes it into the cache, so the rounds pipeline
-      // into consumer jobs instead of paying one extra count() job each
-      centroids = graft.util.TempCaches.track(updated)
+      // each round's centroids are kept (≤ cells tiny rows): the lazy chain
+      // would otherwise replay EVERY earlier round at each downstream use
+      // (each broadcast of `centroids` re-evaluates its whole lineage). The
+      // checkpoint is LAZY — the next round's (or the index pass's) first
+      // job fills it, so the rounds pipeline into consumer jobs instead of
+      // paying one extra count() job each
+      centroids = graft.util.TempCaches.checkpoint(updated)
     }
 
     val indexed = assign(c0, centroids)

@@ -188,7 +188,7 @@ object Pipeline {
     * the release is a no-op there.
     *
     * @param serving the graph is built to serve queries: linked stays kept
-    *        (kg_linked reads it), and the operators' TempCaches tables are
+    *        (kg_linked reads it), and the operators' TempCaches checkpoints are
     *        left to the caller, because the build runs inside a query and
     *        TempCaches may only be released between queries. A pipeline run
     *        releases them once canon is kept, before S5's corpus-wide jobs
@@ -210,7 +210,7 @@ object Pipeline {
     }
     if (!serving) {
       Checkpoints.release(linked)
-      // Canonicalize tracks its vocabulary-sized intermediates (sides, cmap,
+      // Canonicalize keeps its vocabulary-sized intermediates (sides, cmap,
       // CC contract map) in TempCaches; the kept canon is their last consumer
       TempCaches.release(spark)
     }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.io.TableIO
+import graft.util.Checkpoints
 
 /** Structured-Streaming operators over the events stream shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -201,32 +202,37 @@ object Streaming {
     // ONE prep scan of the corpus, not two: the per-user max-ts aggregate
     // (partial-agg'd map-side, shuffle is |users| rows) yields both the
     // sentinel user list and, reduced once more, the global max event time.
+    // Kept (a checkpoint, released once the sentinels are written, also on
+    // failure) so both reads share one aggregate.
     val perUserMax = events.groupBy(col("user_id"))
       .agg(max(unix_millis(col("ts"))).as("max_ms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val maxTsMs = perUserMax.agg(max(col("max_ms"))).as[Long].head()
-    // sentinel strictly more than gap + watermark past every real event
-    val sentinelMs = maxTsMs + gapSec * 1000L + 60000L
-    // Stage = hard-link the corpus files into prepDir (zero-copy; readStream
-    // needs a directory, and the driver's table is a single parquet file),
-    // then APPEND only the sentinel rows (one tiny file per user set). The
-    // corpus is never rewritten — round-4 finding: the previous prep step
-    // copied the entire events table per run, a second full corpus
-    // materialization before the stream even started. The sentinel file
-    // carries the RAW ts type (TIMESTAMP_NTZ) so the dir has one schema.
-    Streaming.linkInto(eventsPath, prepDir)
-    val tsRawType = raw.schema("ts").dataType
-    // coalesce(1): perUserMax is post-shuffle (32 partitions locally), so the
-    // bare write emitted one tiny sentinel file PER partition — each an extra
-    // split (task + open cost) for the single microbatch that reads the prep
-    // dir (guide §6 small-files). The sentinel set is |users| rows; one file.
-    perUserMax.select(col("user_id"))
-      .coalesce(1)
-      .select(lit(-1L).as("event_id"),
-        timestamp_millis(lit(sentinelMs)).cast(tsRawType).as("ts"),
-        col("user_id"), lit("__sentinel").as("event_type"), lit(0.0).as("value"))
-      .write.mode("append").parquet(prepDir)
-    perUserMax.unpersist()
+      .localCheckpoint(false)
+    val maxTsMs = try {
+      val maxMs = perUserMax.agg(max(col("max_ms"))).as[Long].head()
+      // sentinel strictly more than gap + watermark past every real event
+      val sentinelMs = maxMs + gapSec * 1000L + 60000L
+      // Stage = hard-link the corpus files into prepDir (zero-copy;
+      // readStream needs a directory, and the driver's table is a single
+      // parquet file), then APPEND only the sentinel rows (one tiny file per
+      // user set). The corpus is never rewritten: a copy would be a second
+      // full corpus materialization before the stream even starts. The
+      // sentinel file carries the RAW ts type (TIMESTAMP_NTZ) so the dir has
+      // one schema.
+      Streaming.linkInto(eventsPath, prepDir)
+      val tsRawType = raw.schema("ts").dataType
+      // coalesce(1): perUserMax is post-shuffle (32 partitions locally), so
+      // the bare write emitted one tiny sentinel file PER partition — each an
+      // extra split (task + open cost) for the single microbatch that reads
+      // the prep dir (guide §6 small-files). The sentinel set is |users|
+      // rows; one file.
+      perUserMax.select(col("user_id"))
+        .coalesce(1)
+        .select(lit(-1L).as("event_id"),
+          timestamp_millis(lit(sentinelMs)).cast(tsRawType).as("ts"),
+          col("user_id"), lit("__sentinel").as("event_type"), lit(0.0).as("value"))
+        .write.mode("append").parquet(prepDir)
+      maxMs
+    } finally Checkpoints.release(perUserMax)
 
     // one micro-batch for the whole prep dir: FileStreamSource's default
     // maxFilesPerTrigger (1000) would split a >1000-file prep dir into

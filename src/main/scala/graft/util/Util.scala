@@ -60,49 +60,40 @@ object Hashing {
     (avalanche(mix(parts: _*)) >>> 11).toDouble / (1L << 53).toDouble
 }
 
-/** Scoped lifecycle for per-query persisted intermediates (LSH signature /
-  * vector tables): operators that must materialize a table consumed several
-  * times inside one query register it here instead of calling bare
-  * `persist`, and sweep drivers (Bench, Verify) release a session's tracked
-  * tables after each query materializes. Without this, a long-lived session
-  * sweeping many dedup queries accumulates cached signature tables until LRU
-  * eviction — correct, but needless memory pressure at scale.
+/** Scoped lifecycle for the intermediate tables an operator keeps inside
+  * one query: a table built once and read by several consumers (an LSH
+  * signature table, a vocabulary, a per-round centroid table) is kept as an
+  * in-memory checkpoint registered here, and sweep drivers (Bench, Verify)
+  * release a session's checkpoints after each query materializes. Without
+  * the release a long-lived session sweeping many queries accumulates
+  * blocks until session teardown.
+  *
+  * A checkpoint, not a cached table: its scan is the same plan in every
+  * consumer, so adaptive execution reuses one exchange or broadcast over
+  * it; each scan of a cached table becomes a query stage of its own, and
+  * two broadcasts of one cached table run two jobs. Unlike a cached table,
+  * a lost checkpoint block is not recomputed (SCALING.md, "Kept
+  * intermediates").
   *
   * Contract: release(spark) only between queries (after the consumer's
-  * action) — a tracked table unpersisted mid-query would silently recompute
-  * its plan per consumer, the exact re-inlining minhashLsh materializes to
-  * avoid.
+  * action): a checkpoint released mid-query fails its next scan.
   */
 object TempCaches {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  private val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
   private val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
-  /** Drop entries whose session has stopped: their cached blocks died with
-    * the context, and retaining the DataFrames would pin whole plan/session
+  /** Drop entries whose session has stopped: their blocks died with the
+    * context, and retaining the DataFrames would pin whole plan/session
     * graphs for the JVM's lifetime in long-lived processes (tests, Bench)
     * whose library callers never call release.
     */
-  private def dropStopped(): Unit = Seq(tracked, checkpoints)
-    .foreach(_.filterInPlace(df => !df.sparkSession.sparkContext.isStopped))
+  private def dropStopped(): Unit =
+    checkpoints.filterInPlace(df => !df.sparkSession.sparkContext.isStopped)
 
-  /** Persist (MEMORY_AND_DISK) and register for scoped release. */
-  def track(df: DataFrame): DataFrame = synchronized {
-    dropStopped()
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tracked += p
-    p
-  }
-
-  /** In-memory checkpoint (`localCheckpoint`), registered for the same
-    * scoped release: for a table built once for several consumers in one
-    * plan. Unlike a cached table, its scan is the same plan in every
-    * consumer, so adaptive execution reuses one exchange over it; each scan
-    * of a cached table becomes a query stage of its own, and two broadcasts
-    * of one cached table run two jobs. Lazy unless `eager`: the table's
-    * shuffles run now, its last stage in the first job that reads it, which
-    * keeps it.
+  /** In-memory checkpoint (`localCheckpoint`), registered for scoped
+    * release. Lazy unless `eager`: the table's shuffles run now, its last
+    * stage in the first job that reads it, which keeps it.
     */
   def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame = {
     val c = df.localCheckpoint(eager)
@@ -113,26 +104,14 @@ object TempCaches {
     c
   }
 
-  /** Unpersist every tracked table and release every tracked checkpoint
-    * belonging to `spark`.
-    */
+  /** Release every registered checkpoint belonging to `spark`. */
   def release(spark: SparkSession): Unit = synchronized {
     dropStopped()
-    tracked.filterInPlace { df =>
-      val mine = df.sparkSession eq spark
-      if (mine) df.unpersist(blocking = false)
-      !mine
-    }
     checkpoints.filterInPlace { df =>
       val mine = df.sparkSession eq spark
       if (mine) Checkpoints.release(df)
       !mine
     }
-  }
-
-  /** Tracked-table and checkpoint count for `spark` (test hook). */
-  def trackedCount(spark: SparkSession): Int = synchronized {
-    (tracked ++ checkpoints).count(_.sparkSession eq spark)
   }
 }
 

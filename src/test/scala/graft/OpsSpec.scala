@@ -40,23 +40,36 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("per-query LSH caches are released between queries (no accumulation across a sweep)") {
-    import graft.util.TempCaches
+    import graft.model.{AliasEntry, RawTriple}
+    import graft.operators.link.EntityLinker
+    import graft.util.{Hashing, TempCaches}
     TempCaches.release(spark) // clean slate (other suites share the session)
-    val rdds0 = spark.sparkContext.getPersistentRDDs.size
-    // a sweep of cache-tracking dedup queries with the Bench/Verify release
-    // discipline between them must return the session to its baseline
-    (1 to 3).foreach { _ =>
-      Dedup.minhashLsh(docs, "text", "doc_id", threshold = 0.5).count()
-      assert(TempCaches.trackedCount(spark) >= 1) // the signature table is tracked
+    val before = rddsWithBlocks()
+    // each query keeps at least one table, and the Bench/Verify release
+    // between queries returns the block manager to its baseline
+    def query(name: String)(run: => Unit): Unit = {
+      run
+      assert((rddsWithBlocks() -- before).nonEmpty, s"$name kept no table")
       TempCaches.release(spark)
+      val kept = rddsWithBlocks() -- before
+      assert(kept.isEmpty, s"$name: RDDs still holding blocks after release: $kept")
     }
-    Dedup.embeddingNearDup(
+    (1 to 3).foreach { _ =>
+      query("minhashLsh")(Dedup.minhashLsh(docs, "text", "doc_id", threshold = 0.5).count())
+    }
+    query("embeddingNearDup")(Dedup.embeddingNearDup(
       Seq((0L, Array.fill(64)(0.1f)), (1L, Array.fill(64)(0.1f))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", threshold = 0.9).count()
-    TempCaches.release(spark)
-    assert(TempCaches.trackedCount(spark) == 0)
-    assert(spark.sparkContext.getPersistentRDDs.size <= rdds0,
-      s"persisted RDDs accumulated: ${spark.sparkContext.getPersistentRDDs.size} > $rdds0")
+      "embedding", "vec_id", threshold = 0.9).count())
+    // one centroid checkpoint per Lloyd round, plus the training sample
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    query("ivfTopK")(SimilaritySearch.ivfTopK(emb, emb.where(col("vec_id") < 10),
+      "embedding", "vec_id", 3).count())
+    // "Ada Lovelce" misses the dictionary, so the LSH linker runs
+    val dict = EntityLinker.dictionary(spark, Seq(
+      AliasEntry("ada lovelace", Hashing.fnv64("Ada Lovelace"), "Ada Lovelace", "Person"),
+      AliasEntry("paris", Hashing.fnv64("Paris"), "Paris", "Place")))
+    query("EntityLinker.link")(EntityLinker.link(
+      Seq(RawTriple("c1", 0, 0, "Ada Lovelce", "LIVES_IN", "Paris")).toDS(), dict).count())
   }
 
   test("native simhash == declarative 64-lambda formula, bit for bit") {

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.MapPartitionsExec
 import org.apache.spark.sql.functions.{col, lit, lower, trim}
@@ -79,6 +81,24 @@ class PipelineSpec extends SparkTestBase {
       throw new RuntimeException("stage failed")))
     assert(e.getMessage == "stage failed")
     assert((rddsWithBlocks() -- before).isEmpty)
+  }
+
+  test("intermediates are kept only as checkpoints: no persist, cache or unpersist outside Util") {
+    // the block manager holds an operator's kept table in one way, which
+    // adaptive execution reuses exchanges over and Checkpoints.release frees
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val allowed = root.resolve(Paths.get("graft", "util", "Util.scala"))
+    val banned = """\.persist\(|\.cache\(\)|unpersist\(""".r
+    val files = Files.walk(root)
+    val sources = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally files.close()
+    assert(sources.nonEmpty, s"no sources under $root")
+    val hits = for {
+      f <- sources if f != allowed
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if banned.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("both concurrent sides' jobs carry the caller's job group and description") {

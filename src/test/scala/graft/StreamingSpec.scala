@@ -139,6 +139,19 @@ class StreamingSpec extends SparkTestBase {
         s"missing=${expect.diff(got).take(3)}")
   }
 
+  test("sessionizeParquetJob releases its per-user aggregate when staging fails") {
+    // a work dir under a regular file: staging the corpus fails after the
+    // per-user aggregate is filled
+    val file = java.nio.file.Files.createTempFile("graft-st-file", ".txt")
+    val before = rddsWithBlocks()
+    val e = intercept[java.io.IOException](Streaming.sessionizeParquetJob(spark,
+      "/root/testdata/sf0.001/events.parquet", s"$file/work", 43200L))
+    assert(e.getStackTrace.exists(_.getMethodName == "linkInto"), e)
+    val kept = rddsWithBlocks() -- before
+    assert(kept.isEmpty, s"RDDs still holding blocks after the failure: $kept")
+    java.nio.file.Files.delete(file)
+  }
+
   test("windowedCountsParquetJob (append + watermark eviction) == batch hourly agg on sf0.001 events") {
     val eventsPath = "/root/testdata/sf0.001/events.parquet"
     val got = Streaming.windowedCountsParquetJob(spark, eventsPath, tmpDir("graft-stw-job"))
