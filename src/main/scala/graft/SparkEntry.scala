@@ -177,18 +177,15 @@ object SparkEntry {
       member.join(canon, "component")
         .select(col("member"), col("canon")).distinct()
     }),
-    // skew-safe salted aggregation (operators/Salting.scala) under the
-    // oracle gate: exact per-entity mention counts + deterministic bounded
-    // conv_id samples — the collect-style payload whose buffer would grow
-    // with hub-entity group size without the salt+window bound
-    "kg_salted_mentions" -> ((s, dir) => {
-      val m = Extract.mentions(TpchKg.turns(s, dir), TpchKg.gazetteer(s, dir))
-        .select(col("norm"), col("conv_id"))
-      graft.operators.Salting.saltedAgg(m, Seq("norm"), Seq("conv_id"),
-          samplePerKey = 5)
-        .select(col("norm"), col("n_mentions"),
-          concat_ws(",", col("sample_conv_ids")).as("sample_ids"))
-    }),
+    // skew-safe aggregation under the oracle gate: exact per-entity mention
+    // counts + deterministic bounded conv_id samples, the collect-style
+    // payload whose buffer would grow with hub-entity group size; one
+    // partial-aggregated groupBy, since BoundedMinSet caps every buffer at k
+    "kg_salted_mentions" -> ((s, dir) =>
+      Extract.mentions(TpchKg.turns(s, dir), TpchKg.gazetteer(s, dir))
+        .groupBy(col("norm"))
+        .agg(count(lit(1)).as("n_mentions"),
+          concat_ws(",", GraftFunctions.boundedMinSet(col("conv_id"), 5)).as("sample_ids"))),
     "kg_nodes" -> ((s, dir) =>
       kgGraph(s, dir).nodes
         .select(col("name"), element_at(col("labels"), 1).as("label"), col("n_mentions"))),

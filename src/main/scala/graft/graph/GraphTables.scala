@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.model.CanonTriple
-import graft.operators.Salting
 
 /** The materialized property graph (S5): node + edge DataFrames mirroring
   * the reference's flattened entity rows (reference: api/MemCypherGraph.scala
@@ -50,8 +49,9 @@ object Materialize {
     // map-side, so the hub key never carries group-sized state).
     val sides = c.select(col("subj_id").as("id"), col("subj_name").as("name"), col("conv_id"))
       .unionByName(c.select(col("obj_id").as("id"), col("obj_name").as("name"), col("conv_id")))
-    val counted = Salting.saltedAgg(
-      sides, Seq("id"), Seq("conv_id"), samplePerKey = 8, minCols = Seq("name"))
+    val counted = sides.groupBy(col("id")).agg(count(lit(1)).as("n_mentions"),
+      min(col("name")).as("name"),
+      GraftFunctions.boundedMinSet(col("conv_id"), 8).as("sample_conv_ids"))
 
     val labeled = entityTypes match {
       case Some(types) =>

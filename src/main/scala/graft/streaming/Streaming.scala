@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.io.TableIO
 import graft.util.Checkpoints
@@ -20,10 +22,8 @@ object Streaming {
   /** Populate `destDir` with ZERO-COPY links to the parquet data file(s) at
     * `srcPath` (a single file or a directory of part files): hard link when
     * the filesystems allow it, symlink otherwise, byte copy only as a last
-    * resort. This is what lets the bounded-replay gate jobs stream a table
-    * without duplicating the corpus (readStream requires a directory, and
-    * the driver's tables are single parquet files); a production stream
-    * reads its table directory directly and needs no staging at all.
+    * resort. [[replay]] stages with it; a production stream reads its table
+    * directory directly and needs no staging at all.
     */
   private[streaming] def linkInto(srcPath: String, destDir: String): Unit = {
     import java.nio.file.{Files, Path, Paths}
@@ -155,124 +155,113 @@ object Streaming {
       }
   }
 
-  /** End-to-end streaming sessionization job over an events parquet table —
-    * the driver-gate surface for [[sessionizeStream]]: readStream →
-    * flatMapGroupsWithState → foreachBatch append to parquet, run to
-    * completion with Trigger.AvailableNow, then the closed sessions are read
-    * back. Deterministic and equal to batch gaps-and-islands sessionization
-    * because one SENTINEL event per user is appended a full gap past the
-    * global max event time: when the stream drains, every real session has
-    * been proven closed by a later event and emitted exactly once; the
-    * sentinel's own singleton session stays open in state and is discarded
-    * with the stream (and filtered by `session_start <= max real ts` for
-    * belt-and-braces). This is how a production run closes the books on a
-    * bounded replay without weakening the streaming semantics.
+  /** Bounded replay of the events table at `eventsPath` through the
+    * streaming `query`: the protocol behind both driver-gate jobs. It
+    * resets `workDir`, stages the corpus and the caller's `sentinels` in
+    * `workDir/input`, drains the query over that directory with
+    * `Trigger.AvailableNow`, appending each micro-batch to
+    * `workDir/<outName>` as parquet, and returns the emitted rows.
     *
-    * The drain is ONE micro-batch. Every sentinel sorts after its user's
-    * real events, so the data batch itself closes and emits every real
-    * session; the query runs with
-    * `spark.sql.streaming.noDataMicroBatches.enabled=false` (for this query
-    * only) so that no empty batch follows it. The events table and the
-    * emitted sessions are read with [[graft.io.TableIO.readParquet]], whose
-    * schema comes from a file footer, so neither read adds a Spark job.
+    *  - Staging is zero-copy: the corpus files are linked in
+    *    ([[linkInto]]), because a file stream reads a directory and the
+    *    driver's tables are single parquet files, and only the sentinel rows
+    *    are written. Each sentinel sits past every real event by more than
+    *    the query's gap or window plus its watermark, so when the drain ends
+    *    every real session or window has been proven closed and emitted
+    *    exactly once, while the sentinel's own stays open in state and is
+    *    left to the caller's read-back filter.
+    *  - The sentinels are written with the table's raw `ts` type
+    *    (TIMESTAMP_NTZ), so the directory has one schema. The stream casts
+    *    `ts` to TIMESTAMP, which the operators expect; the session runs UTC,
+    *    so the cast is lossless.
+    *  - The whole directory is one micro-batch (`maxFilesPerTrigger` is
+    *    unbounded). With the default of 1000 files a batch, a large
+    *    directory splits into batches with no event-time order, and a
+    *    sentinel read early would advance the watermark past real events,
+    *    which later batches then drop.
+    *  - With `oneBatch`, the query runs with no-data micro-batches off, so
+    *    that no empty batch follows the data batch. A query copies the
+    *    session's conf when it starts, and the caller's setting is restored
+    *    right after.
     *
-    * Returns (user_id, start_ms, end_ms, n_events) with epoch-millisecond
-    * longs — integer-exact columns only, so the result is oracle-comparable
-    * (float sums stay out of the gate).
+    * `raw` is the table as [[graft.io.TableIO.readParquet]] reads it, and so
+    * is the output: the schema comes from a file footer, so neither read
+    * adds a Spark job. `sentinels` has the stream's columns, `ts` as
+    * TIMESTAMP.
     */
-  def sessionizeParquetJob(spark: org.apache.spark.sql.SparkSession,
-      eventsPath: String, workDir: String, gapSec: Long): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val prepDir = s"$workDir/input"
-    val outDir = s"$workDir/sessions"
-    val ckDir = s"$workDir/ckpt"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(workDir), true)
-
-    // the parquet ts column is TIMESTAMP_NTZ; the session runs UTC, so the
-    // cast to (ltz) TIMESTAMP — what the Event encoder and unix_millis
-    // expect — is lossless
-    val raw = TableIO.readParquet(spark, eventsPath)
-    val rawCols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val events = raw
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-    // ONE prep scan of the corpus, not two: the per-user max-ts aggregate
-    // (partial-agg'd map-side, shuffle is |users| rows) yields both the
-    // sentinel user list and, reduced once more, the global max event time.
-    // Kept (a checkpoint, released once the sentinels are written, also on
-    // failure) so both reads share one aggregate.
-    val perUserMax = events.groupBy(col("user_id"))
-      .agg(max(unix_millis(col("ts"))).as("max_ms"))
-      .localCheckpoint(false)
-    val maxTsMs = try {
-      val maxMs = perUserMax.agg(max(col("max_ms"))).as[Long].head()
-      // sentinel strictly more than gap + watermark past every real event
-      val sentinelMs = maxMs + gapSec * 1000L + 60000L
-      // Stage = hard-link the corpus files into prepDir (zero-copy;
-      // readStream needs a directory, and the driver's table is a single
-      // parquet file), then APPEND only the sentinel rows (one tiny file per
-      // user set). The corpus is never rewritten: a copy would be a second
-      // full corpus materialization before the stream even starts. The
-      // sentinel file carries the RAW ts type (TIMESTAMP_NTZ) so the dir has
-      // one schema.
-      Streaming.linkInto(eventsPath, prepDir)
-      val tsRawType = raw.schema("ts").dataType
-      // coalesce(1): perUserMax is post-shuffle (32 partitions locally), so
-      // the bare write emitted one tiny sentinel file PER partition — each an
-      // extra split (task + open cost) for the single microbatch that reads
-      // the prep dir (guide §6 small-files). The sentinel set is |users|
-      // rows; one file.
-      perUserMax.select(col("user_id"))
-        .coalesce(1)
-        .select(lit(-1L).as("event_id"),
-          timestamp_millis(lit(sentinelMs)).cast(tsRawType).as("ts"),
-          col("user_id"), lit("__sentinel").as("event_type"), lit(0.0).as("value"))
-        .write.mode("append").parquet(prepDir)
-      maxMs
-    } finally Checkpoints.release(perUserMax)
-
-    // one micro-batch for the whole prep dir: FileStreamSource's default
-    // maxFilesPerTrigger (1000) would split a >1000-file prep dir into
-    // several batches with no event-time ordering — if the sentinel file
-    // landed in an early batch the watermark would advance past every real
-    // event and later batches would be silently dropped
-    val streamSchema = org.apache.spark.sql.types.StructType(rawCols.map(raw.schema(_)))
+  private def replay(raw: DataFrame, eventsPath: String, workDir: String,
+      outName: String, oneBatch: Boolean, sentinels: DataFrame)(
+      query: DataFrame => DataFrame): DataFrame = {
+    val spark = raw.sparkSession
+    val work = new Path(workDir)
+    work.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(work, true)
+    val inDir = s"$workDir/input"
+    val outDir = s"$workDir/$outName"
+    linkInto(eventsPath, inDir)
+    sentinels.withColumn("ts", col("ts").cast(raw.schema("ts").dataType))
+      .write.mode("append").parquet(inDir)
     val stream = spark.readStream
       .option("maxFilesPerTrigger", Int.MaxValue)
-      .schema(streamSchema).parquet(prepDir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    // one micro-batch: the sentinels close every real session inside the
-    // data batch, so the no-data batch that would follow it (state-store
-    // load and commit, offset and commit logs) emits nothing. The setting
-    // is for this query only: a query copies the session's conf when it
-    // starts, and the caller's value is restored right after.
+      .schema(StructType(sentinels.columns.toSeq.map(raw.schema(_)))).parquet(inDir)
+      .withColumn("ts", col("ts").cast("timestamp"))
     val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
     val callerNoData = spark.conf.getOption(noData)
-    spark.conf.set(noData, "false")
+    if (oneBatch) spark.conf.set(noData, "false")
     val q =
-      try sessionizeStream(stream, gapSec)
+      try query(stream)
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", ckDir)
+        .option("checkpointLocation", s"$workDir/ckpt")
         .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Session], _: Long) =>
+        .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
         .start()
       finally callerNoData.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
     q.awaitTermination()
-
     TableIO.readParquet(spark, outDir)
-      .where(unix_millis(col("session_start")) <= maxTsMs) // drop sentinel-born sessions
-      .select(col("user_id"),
-        unix_millis(col("session_start")).as("start_ms"),
-        unix_millis(col("session_end")).as("end_ms"),
-        col("n_events"))
+  }
+
+  /** End-to-end streaming sessionization job over an events parquet table:
+    * the driver-gate surface for [[sessionizeStream]], a bounded replay
+    * (see [[replay]]) with one sentinel event per user. Equal to batch
+    * gaps-and-islands sessionization: every sentinel sorts after its
+    * user's real events, so the data batch itself closes and emits every
+    * real session and the drain is ONE micro-batch. The sentinels' own
+    * singleton sessions are filtered by `session_start <= max real ts`.
+    *
+    * Returns (user_id, start_ms, end_ms, n_events) with epoch-millisecond
+    * longs: integer-exact columns only, so the result is oracle-comparable
+    * (float sums stay out of the gate).
+    */
+  def sessionizeParquetJob(spark: SparkSession,
+      eventsPath: String, workDir: String, gapSec: Long): DataFrame = {
+    import spark.implicits._
+    val raw = TableIO.readParquet(spark, eventsPath)
+    // ONE prep scan of the corpus: the per-user max (partial-agg'd map-side,
+    // |users| rows after the shuffle) gives both the sentinel users and,
+    // reduced once more, the max real event time. Kept, and released when
+    // the job ends (also on failure), so both reads share one aggregate.
+    val perUserMax = raw.groupBy(col("user_id"))
+      .agg(max(unix_millis(col("ts").cast("timestamp"))).as("max_ms"))
+      .localCheckpoint(false)
+    try {
+      val maxMs = perUserMax.agg(max(col("max_ms"))).as[Long].head()
+      // strictly more than gap + watermark past every real event
+      val sentinelMs = maxMs + gapSec * 1000L + 60000L
+      // coalesce(1): perUserMax is post-shuffle, and each sentinel file
+      // would be one more split (task plus open cost) of the micro-batch
+      val sentinels = perUserMax.select(col("user_id")).coalesce(1)
+        .select(lit(-1L).as("event_id"), timestamp_millis(lit(sentinelMs)).as("ts"),
+          col("user_id"), lit("__sentinel").as("event_type"), lit(0.0).as("value"))
+      replay(raw, eventsPath, workDir, "sessions", oneBatch = true, sentinels)(
+          stream => sessionizeStream(stream.as[Event], gapSec).toDF())
+        .where(unix_millis(col("session_start")) <= maxMs)
+        .select(col("user_id"),
+          unix_millis(col("session_start")).as("start_ms"),
+          unix_millis(col("session_end")).as("end_ms"),
+          col("n_events"))
+    } finally Checkpoints.release(perUserMax)
   }
 
   /** Watermarked tumbling-window aggregation (the canonical streaming agg):
@@ -291,77 +280,38 @@ object Streaming {
     * shape (append output + watermark eviction + foreachBatch parquet — the
     * same plan a production stream runs forever on): a window's row is
     * emitted exactly once, when the event-time watermark passes its end, and
-    * its state is evicted. Complete-mode/memory-sink (the previous gate
-    * shape) would instead accumulate every window ever seen in driver
-    * memory. Like [[sessionizeParquetJob]], a single sentinel event past
-    * `max ts + windowDur + watermark` proves every real window closed inside
-    * the AvailableNow drain; the sentinel's own window is filtered on
-    * read-back. Unlike sessionization this drain keeps its no-data batch:
-    * a window is emitted only once the watermark has passed its end, and
-    * the watermark the sentinel sets takes effect in that batch.
+    * its state is evicted. Complete-mode/memory-sink would instead
+    * accumulate every window ever seen in driver memory. A bounded replay
+    * (see [[replay]]) with a single sentinel event past
+    * `max ts + windowDur + watermark`; the sentinel's own window is filtered
+    * on read-back. The drain is TWO micro-batches: a window is emitted only
+    * once the watermark has passed its end, and the watermark the sentinel
+    * sets in the data batch takes effect in the no-data batch after it.
     *
     * Returns (hour_sec, event_type, n) — integer-exact columns only, so the
     * result is oracle-comparable (float sums stay out of the gate; the batch
     * path q14 gates decimal sums).
     */
-  def windowedCountsParquetJob(spark: org.apache.spark.sql.SparkSession,
+  def windowedCountsParquetJob(spark: SparkSession,
       eventsPath: String, workDir: String,
       windowDur: String = "1 hour", watermark: String = "10 seconds"): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val prepDir = s"$workDir/input"
-    val outDir = s"$workDir/windows"
-    val ckDir = s"$workDir/ckpt"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(workDir), true)
-
     import spark.implicits._
     val raw = TableIO.readParquet(spark, eventsPath)
-    val rawCols = Seq("ts", "event_type", "value")
-    val events = raw
-      .select(col("ts").cast("timestamp").as("ts"), col("event_type"), col("value"))
-    // sentinel lead DERIVED from the actual windowDur + watermark (not a
-    // fixed default silently coupled to "1 hour"): the watermark must end up
-    // strictly past the END of the window containing the last real event, or
-    // append mode never emits the final windows — silent row loss. Evaluated
-    // with the engine's own window/interval arithmetic so any parsable
-    // duration strings stay consistent with the streaming plan — folded into
-    // the SAME job as the max-ts aggregate (the separate one-row follow-up
-    // job bought nothing but a scheduler round trip).
-    val (maxTsMs, sentinelMs) = events.agg(max(col("ts")).as("m"))
+    // the sentinel lead is derived from windowDur + watermark with the
+    // engine's own window and interval arithmetic: the watermark must end
+    // strictly past the END of the last real event's window, or append mode
+    // never emits it. One job computes it with the max.
+    val (maxMs, sentinelMs) = raw.agg(max(col("ts").cast("timestamp")).as("m"))
       .select(unix_millis(col("m")).as("max_ms"),
         (unix_millis(window(col("m"), windowDur).getField("end") +
           expr(s"INTERVAL $watermark")) + lit(60000L)).as("sentinel_ms"))
       .as[(Long, Long)].head()
-    // hard-link the corpus in, append only the one sentinel row — the corpus
-    // is never rewritten (see sessionizeParquetJob); raw ts type keeps the
-    // prep dir single-schema
-    Streaming.linkInto(eventsPath, prepDir)
-    val tsRawType = raw.schema("ts").dataType
-    spark.range(1).select(
-      timestamp_millis(lit(sentinelMs)).cast(tsRawType).as("ts"),
+    val sentinel = spark.range(1).select(timestamp_millis(lit(sentinelMs)).as("ts"),
       lit("__sentinel").as("event_type"), lit(0.0).as("value"))
-      .write.mode("append").parquet(prepDir)
-
-    val streamSchema = org.apache.spark.sql.types.StructType(rawCols.map(raw.schema(_)))
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", Int.MaxValue) // single batch — see sessionizeParquetJob
-      .schema(streamSchema).parquet(prepDir)
-      .select(col("ts").cast("timestamp").as("ts"), col("event_type"), col("value"))
-    val q = windowedCounts(stream, windowDur, watermark)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    TableIO.readParquet(spark, outDir)
+    replay(raw, eventsPath, workDir, "windows", oneBatch = false, sentinel)(
+        windowedCounts(_, windowDur, watermark))
       .where(col("event_type") =!= "__sentinel" &&
-        unix_millis(col("window_start")) <= maxTsMs)
+        unix_millis(col("window_start")) <= maxMs)
       .select(unix_timestamp(col("window_start")).as("hour_sec"),
         col("event_type"), col("n"))
   }

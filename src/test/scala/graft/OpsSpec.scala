@@ -3,13 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, RollingFingerprint}
-import graft.operators.Salting
 import graft.operators.dedup.Dedup
 import graft.operators.multimodal.Multimodal
 import graft.operators.similarity.SimilaritySearch
 
 /** Training-data ops: dedup recall vs exact Jaccard, ANN recall vs brute
-  * force, fingerprint invariances, salted aggregation correctness.
+  * force, fingerprint invariances, bounded-sample aggregation correctness.
   */
 class OpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -260,23 +259,6 @@ class OpsSpec extends SparkTestBase {
     assert(viaSpark == graft.util.Hashing.fnv64("Ada Lovelace"))
   }
 
-  test("salted aggregation = plain groupBy counts, bounded deterministic samples") {
-    val rows = (0 until 1000).map(i => (i % 7L, s"name${i % 7}", s"conv-${i % 50}"))
-      .toDF("id", "name", "conv_id")
-    val salted = Salting.saltedAgg(rows, Seq("id", "name"), Seq("conv_id"), samplePerKey = 5)
-      .select(col("id"), col("n_mentions"), col("sample_conv_ids"))
-      .as[(Long, Long, Seq[String])].collect()
-    val plain = rows.groupBy("id").count().as[(Long, Long)].collect().toMap
-    salted.foreach { case (id, n, sample) =>
-      assert(n == plain(id))
-      assert(sample.length == 5)
-      // exactly the k smallest distinct values, sorted ascending
-      val expect = (0 until 1000).filter(i => i % 7 == id).map(i => s"conv-${i % 50}")
-        .distinct.sorted.take(5)
-      assert(sample == expect)
-    }
-  }
-
   test("bounded_min_set: caps at k, dedups, survives multi-partition merge") {
     val df = spark.range(0, 10000, 1, 16) // 16 partitions force partial merges
       .select((col("id") % 100).as("k"), concat(lit("v"), format_string("%04d", col("id") % 500)).as("v"))
@@ -286,6 +268,28 @@ class OpsSpec extends SparkTestBase {
       // values for key k: v%04d where id%100==k → id%500 ∈ {k, k+100, ..., k+400}
       val expect = (0 until 5).map(j => f"v${k + 100 * j}%04d").sorted.take(3)
       assert(out(k) == expect, s"key $k")
+    }
+  }
+
+  test("salted aggregation = plain groupBy counts, bounded deterministic samples") {
+    // the skew-safe aggregate `Materialize.graph` and `kg_salted_mentions` run:
+    // an exact count and a bounded sample in one partial-aggregated groupBy
+    val rows = (0 until 1000).map(i => (i % 7L, s"name${i % 7}", s"conv-${i % 50}"))
+      .toDF("id", "name", "conv_id")
+    val salted = rows.groupBy(col("id"), col("name"))
+      .agg(count(lit(1)).as("n_mentions"),
+        GraftFunctions.boundedMinSet(col("conv_id"), 5).as("sample_conv_ids"))
+      .select(col("id"), col("n_mentions"), col("sample_conv_ids"))
+      .as[(Long, Long, Seq[String])].collect()
+    val plain = rows.groupBy("id").count().as[(Long, Long)].collect().toMap
+    assert(salted.length == plain.size)
+    salted.foreach { case (id, n, sample) =>
+      assert(n == plain(id))
+      assert(sample.length == 5)
+      // exactly the k smallest distinct values, sorted ascending
+      val expect = (0 until 1000).filter(i => i % 7 == id).map(i => s"conv-${i % 50}")
+        .distinct.sorted.take(5)
+      assert(sample == expect)
     }
   }
 

@@ -83,21 +83,39 @@ class PipelineSpec extends SparkTestBase {
     assert((rddsWithBlocks() -- before).isEmpty)
   }
 
-  test("intermediates are kept only as checkpoints: no persist, cache or unpersist outside Util") {
-    // the block manager holds an operator's kept table in one way, which
-    // adaptive execution reuses exchanges over and Checkpoints.release frees
+  /** "path:line: text" of each line of a main source, other than the
+    * `allowed` files (paths under src/main/scala/graft), that `banned`
+    * matches.
+    */
+  private def mainSourceHits(banned: scala.util.matching.Regex,
+      allowed: String*): Seq[String] = {
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
-    val allowed = root.resolve(Paths.get("graft", "util", "Util.scala"))
-    val banned = """\.persist\(|\.cache\(\)|unpersist\(""".r
+    val skip = allowed.map(root.resolve("graft").resolve(_)).toSet
     val files = Files.walk(root)
     val sources = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
       finally files.close()
     assert(sources.nonEmpty, s"no sources under $root")
-    val hits = for {
-      f <- sources if f != allowed
+    for {
+      f <- sources if !skip(f)
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if banned.findFirstIn(line).isDefined
     } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+  }
+
+  test("intermediates are kept only as checkpoints: no persist, cache or unpersist outside Util") {
+    // the block manager holds an operator's kept table in one way, which
+    // adaptive execution reuses exchanges over and Checkpoints.release frees
+    val hits = mainSourceHits("""\.persist\(|\.cache\(\)|unpersist\(""".r, "util/Util.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no environment variable is read outside the harness and the stream scratch path") {
+    // a setting read from the environment is a configuration no test or
+    // benchmark covers; only the measurement mains and the deployment path
+    // of the streaming scratch dir read one
+    val hits = mainSourceHits("""sys\.env|System\.getenv""".r,
+      "Bench.scala", "BenchTrial.scala", "BenchExtra.scala", "Verify.scala")
+      .filterNot(_.contains("sys.env.get(\"GRAFT_STREAM_SCRATCH\")"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

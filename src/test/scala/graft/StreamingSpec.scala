@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 import graft.streaming.Streaming
 import graft.streaming.Streaming.Event
@@ -95,42 +95,55 @@ class StreamingSpec extends SparkTestBase {
     assert(!sessions.exists(_._1 == 2L), s"user 2's session is still open: $sessions")
   }
 
-  /** What `job` returns, and the batch ids of the micro-batches that the
-    * streaming queries it ran reported progress for.
+  private val eventsPath = "/root/testdata/sf0.001/events.parquet"
+  private def sessionsJob(workDir: String) =
+    Streaming.sessionizeParquetJob(spark, eventsPath, workDir, gapSec = 43200L)
+  private def windowsJob(workDir: String) =
+    Streaming.windowedCountsParquetJob(spark, eventsPath, workDir)
+  private val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** What the bounded-replay `job` returns, after checking its drain: the
+    * streaming query it ran reported progress for micro-batches `batches`,
+    * its last progress counts `stateRows` rows in its one state store, and
+    * the session's no-data micro-batch setting is unchanged.
     */
-  private def microBatches[T](job: => T): (T, Seq[Long]) = {
-    val batches = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
+  private def drained[T](batches: Seq[Long], stateRows: Long)(job: => T): T = {
+    val callerNoData = spark.conf.getOption(noData)
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
     val terminated = new java.util.concurrent.CountDownLatch(1)
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        batches.add(e.progress.batchId)
+        progress.add(e.progress)
       // delivered in order: every progress event of the query came before it
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         terminated.countDown()
     }
     spark.streams.addListener(listener)
-    try {
+    val out = try {
       val out = job
       assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS), "no query terminated")
-      (out, batches.asScala.toSeq.map(_.longValue))
+      out
     } finally spark.streams.removeListener(listener)
+    val ran = progress.asScala.toSeq
+    assert(ran.map(_.batchId) == batches, s"the drain ran micro-batches ${ran.map(_.batchId)}")
+    assert(ran.last.stateOperators.map(_.numRowsTotal).toSeq == Seq(stateRows),
+      s"state rows after the drain: ${ran.last.stateOperators.map(_.numRowsTotal).toSeq}")
+    assert(spark.conf.getOption(noData) == callerNoData, "the session's setting changed")
+    out
   }
 
   test("sessionizeParquetJob == batch sessionize on the sf0.001 events table") {
-    val eventsPath = "/root/testdata/sf0.001/events.parquet"
     val gapSec = 43200L
-    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val callerNoData = spark.conf.getOption(noData)
-    val (sessions, batches) = microBatches(Streaming.sessionizeParquetJob(spark, eventsPath,
-      tmpDir("graft-st-job"), gapSec))
-    assert(batches == Seq(0L), s"the drain ran micro-batches $batches, not one")
-    assert(spark.conf.getOption(noData) == callerNoData, "the session's setting changed")
-    val got = sessions.as[(Long, Long, Long, Long)].collect().toSet
     val events = spark.read.parquet(eventsPath)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
       .as[Event]
+    // one micro-batch; the state keeps one open session a user, the
+    // sentinel's
+    val users = events.select("user_id").distinct().count()
+    val got = drained(Seq(0L), stateRows = users)(sessionsJob(tmpDir("graft-st-job")))
+      .as[(Long, Long, Long, Long)].collect().toSet
     val expect = Streaming.sessionize(events, gapSec).collect()
       .map(s => (s.user_id, s.session_start.getTime, s.session_end.getTime, s.n_events))
       .toSet
@@ -139,22 +152,27 @@ class StreamingSpec extends SparkTestBase {
         s"missing=${expect.diff(got).take(3)}")
   }
 
-  test("sessionizeParquetJob releases its per-user aggregate when staging fails") {
-    // a work dir under a regular file: staging the corpus fails after the
-    // per-user aggregate is filled
-    val file = java.nio.file.Files.createTempFile("graft-st-file", ".txt")
-    val before = rddsWithBlocks()
-    val e = intercept[java.io.IOException](Streaming.sessionizeParquetJob(spark,
-      "/root/testdata/sf0.001/events.parquet", s"$file/work", 43200L))
-    assert(e.getStackTrace.exists(_.getMethodName == "linkInto"), e)
-    val kept = rddsWithBlocks() -- before
-    assert(kept.isEmpty, s"RDDs still holding blocks after the failure: $kept")
-    java.nio.file.Files.delete(file)
-  }
+  for ((name, job) <- Seq[(String, String => Any)](
+      "sessionizeParquetJob releases its per-user aggregate when staging fails" -> sessionsJob,
+      "windowedCountsParquetJob holds no blocks when staging fails" -> windowsJob))
+    test(name) {
+      // a work dir under a regular file: staging the corpus fails after the
+      // job's aggregates have run
+      val callerNoData = spark.conf.getOption(noData)
+      val file = java.nio.file.Files.createTempFile("graft-st-file", ".txt")
+      val before = rddsWithBlocks()
+      val e = intercept[java.io.IOException](job(s"$file/work"))
+      assert(e.getStackTrace.exists(_.getMethodName == "linkInto"), e)
+      val kept = rddsWithBlocks() -- before
+      assert(kept.isEmpty, s"RDDs still holding blocks after the failure: $kept")
+      assert(spark.conf.getOption(noData) == callerNoData, "the session's setting changed")
+      java.nio.file.Files.delete(file)
+    }
 
   test("windowedCountsParquetJob (append + watermark eviction) == batch hourly agg on sf0.001 events") {
-    val eventsPath = "/root/testdata/sf0.001/events.parquet"
-    val got = Streaming.windowedCountsParquetJob(spark, eventsPath, tmpDir("graft-stw-job"))
+    // two micro-batches: the sentinel's watermark emits the windows in the
+    // second, which evicts all but the sentinel's window from state
+    val got = drained(Seq(0L, 1L), stateRows = 1L)(windowsJob(tmpDir("graft-stw-job")))
       .as[(Long, String, Long)].collect().toSet
     val expect = spark.read.parquet(eventsPath)
       .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_sec"), col("event_type"))
